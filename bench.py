@@ -239,6 +239,10 @@ def main() -> None:
             pass
 
     total = round(sum(t for t in timings.values() if t >= 0), 3)
+    # a failed query (-1.0) is missing from the total, so the total
+    # alone would read a failure as a speedup: report the count and
+    # exit non-zero below
+    failed = sum(1 for t in timings.values() if t < 0)
     # Apples-to-apples with the reference's single quantitative trace
     # (~769 blocks/s indexing sample, reference README.md:188): blocks
     # covered by the raw-log lake / wall time of the full decode+enrich
@@ -275,6 +279,7 @@ def main() -> None:
         "metric": "total_query_wall_seconds",
         "value": total,
         "unit": "sec",
+        "failed": failed,
         "queries": short,
         "sf": sf,
         "blocks_per_sec": bps,
@@ -284,6 +289,8 @@ def main() -> None:
     # destroys the round's bench record — fail the run instead
     assert len(line) < 1900, f"bench JSON line {len(line)}B >= 1900B"
     print(line)
+    if failed:
+        sys.exit(f"bench: {failed} queries failed")
 
 
 if __name__ == "__main__":

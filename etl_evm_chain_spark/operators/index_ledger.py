@@ -1,6 +1,8 @@
-"""Compaction ledger for the BATCH landed indexes (LSH near-dup,
-exact-dedup fingerprints, IVF cells) — the batch analog of the
-streaming ``_compacted/upto=N`` protocol (streaming/pipeline.py).
+"""Every ledger layout on disk: the streaming epoch ledgers
+(:class:`EpochLedger`, ``batch_id=<e>/`` + ``_compacted/upto=<N>/``)
+and, below, the compaction ledger for the BATCH landed indexes (LSH
+near-dup, exact-dedup fingerprints, IVF cells) — ``gen=<g>/`` plus a
+``_folded/`` manifest.
 
 Why: every increment lands its own ``batch_id=b<id>/<part>=N/``
 partition directory, so a long-lived index accumulates directories
@@ -43,22 +45,34 @@ increment counts.
 from __future__ import annotations
 
 import re
+from functools import cached_property, lru_cache
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _GEN_RE = re.compile(r"^gen=(\d+)$")
+_EPOCH_RE = re.compile(r"^batch_id=(\d+)$")
+_UPTO_RE = re.compile(r"^upto=(\d+)$")
+_BATCH_RE = re.compile(r"^batch_id=(.+)$")
 
 
 def _fs(spark: SparkSession, path: str):
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    jpath = _path_class(spark._jvm)(path)
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
+@lru_cache(maxsize=1)
+def _path_class(jvm):
+    # resolving org.apache.hadoop.fs.Path through the JVM view costs a
+    # py4j round trip per package segment (~2 ms); resolve it once
+    return jvm.org.apache.hadoop.fs.Path
+
+
 def _jp(spark: SparkSession, *parts: str):
-    p = spark._jvm.org.apache.hadoop.fs.Path(parts[0])
+    path = _path_class(spark._jvm)
+    p = path(parts[0])
     for q in parts[1:]:
-        p = spark._jvm.org.apache.hadoop.fs.Path(p, q)
+        p = path(p, q)
     return p
 
 
@@ -79,6 +93,8 @@ def touch_liveness(root: str) -> None:
     import os
     import re
 
+    if root.startswith("file:"):
+        root = root[len("file:"):]
     try:
         os.utime(root, None)
     except OSError:
@@ -133,52 +149,198 @@ def _has_data(fs, jdir) -> bool:
                for st in fs.listStatus(jdir))
 
 
+def _children(spark: SparkSession, fs, jdir, rx) -> list:
+    """``(id, path, committed)`` for every child of ``jdir`` whose name
+    matches ``rx`` (id = its first group; committed = it holds a
+    parquet ``_SUCCESS`` marker). A missing ``jdir`` lists empty."""
+    if not fs.exists(jdir):
+        return []
+    path = _path_class(spark._jvm)
+    out = []
+    for st in fs.listStatus(jdir):
+        jp = st.getPath()
+        m = rx.fullmatch(jp.getName())
+        if m:
+            out.append((m.group(1), str(jp.toString()),
+                        fs.exists(path(jp, "_SUCCESS"))))
+    return out
+
+
+# ---------------------------------------------------------------------------
+# Streaming epoch ledgers (streaming/pipeline.py: count-min, KMV,
+# matview, k-means, expectations, drift; driven by plans/ledger_q.py)
+# ---------------------------------------------------------------------------
+
+def geometry_guard(df: DataFrame, ok: Column, message: Column) -> DataFrame:
+    """``df`` plus a ``_geom_ok`` column (always 1) that exists only
+    once ``ok`` held over ALL of ``df``: one 1-row aggregate asserts it
+    and is broadcast-joined back. The check is global, never per output
+    group — two epochs of different geometry whose populated groups
+    never meet would dodge a per-group check and fold silently into
+    wrong state. Folds multiply ``F.first("_geom_ok")`` into a count
+    (or gate an output on it) so pruning can never elide the
+    assertion."""
+    chk = df.agg(F.when(F.assert_true(ok, message).isNull(),
+                        F.lit(1).cast("long")).alias("_geom_ok"))
+    return df.crossJoin(F.broadcast(chk))
+
+
+class EpochLedger:
+    """The epoch-directory ledger protocol, on the Hadoop FileSystem
+    API (bare local paths, ``file://``, HDFS and object stores alike).
+
+    Layout under ``root``:
+
+    - ``batch_id=<e>/``: one epoch's state, the batch's monoid fold
+      (:meth:`write`). foreachBatch is at-least-once, but the state is
+      a pure function of the batch's rows, so a replayed epoch
+      overwrites its directory with identical rows: exactly-once.
+    - ``_compacted/upto=<N>/``: a baseline holding the fold of every
+      epoch ≤ N (:meth:`compact`).
+
+    A directory counts only once its parquet ``_SUCCESS`` commit marker
+    exists. Readers see the newest committed baseline plus the
+    committed epochs above it (:meth:`live_paths`); a torn epoch is
+    never read, and compaction never folds past one, so its replay
+    stays live instead of becoming an ignored ghost. Compaction writes
+    the new baseline first and only then (``gc``) deletes the epochs
+    and baselines it supersedes: a crash in between double-stores but
+    never double-counts, and a replayed epoch ≤ N recreating its
+    directory is ignored. Folding epochs into a baseline is legal
+    because every ledger state is a commutative monoid — the law that
+    also makes incremental == one-shot."""
+
+    def __init__(self, spark: SparkSession, root: str):
+        self.spark = spark
+        self.root = root.rstrip("/")
+
+    @cached_property
+    def fs(self):
+        return _fs(self.spark, self.root)[0]
+
+    def _list(self, rx, *sub: str) -> list:
+        return sorted((int(n), p, ok) for n, p, ok in
+                      _children(self.spark, self.fs,
+                                _jp(self.spark, self.root, *sub), rx))
+
+    def baseline(self) -> int | None:
+        """``upto`` of the newest committed baseline, or None."""
+        done = [n for n, _, ok in self._list(_UPTO_RE, "_compacted")
+                if ok]
+        return done[-1] if done else None
+
+    def _scan(self) -> tuple[int, list]:
+        """(the baseline's ``upto``, -1 without one; every epoch
+        directory as ``(epoch, path, committed)``)."""
+        base = self.baseline()
+        return -1 if base is None else base, self._list(_EPOCH_RE)
+
+    def live_epochs(self) -> list[int]:
+        """Committed epochs above the baseline."""
+        floor, listed = self._scan()
+        return [e for e, _, ok in listed if ok and e > floor]
+
+    def pending(self, epochs) -> list[int]:
+        """The ``epochs`` still to land: neither committed nor folded
+        into the baseline (a lifecycle replay skips the rest — their
+        state would come back byte-identical)."""
+        floor, listed = self._scan()
+        done = {e for e, _, ok in listed if ok}
+        return [e for e in epochs if e > floor and e not in done]
+
+    def live_paths(self) -> list[str]:
+        floor, listed = self._scan()
+        paths = ([] if floor < 0 else
+                 [f"{self.root}/_compacted/upto={floor}"])
+        paths += [f"{self.root}/batch_id={e}" for e, _, ok in listed
+                  if ok and e > floor]
+        if paths:
+            return paths
+        if listed:
+            # a crash during the very first epoch's write: folding its
+            # partial files would break the committed-only contract
+            raise ValueError(
+                f"ledger at {self.root} contains only uncommitted "
+                "(torn, no _SUCCESS) epoch writes — refusing to read "
+                "partial state; replay the stream to commit the epoch")
+        # nothing at all: surface the error a direct read gives
+        return [self.root]
+
+    def read(self) -> DataFrame:
+        """The raw union of the live state rows (fold it to read)."""
+        return self.spark.read.parquet(*self.live_paths())
+
+    def write(self, batch_df: DataFrame, batch_id: int, fold, *,
+              one_file: bool = True) -> None:
+        """Land ``fold(batch_df)`` as epoch ``batch_id``; an empty
+        batch lands nothing."""
+        if batch_df.isEmpty():
+            return
+        state = fold(batch_df)
+        if one_file:
+            state = state.coalesce(1)
+        state.write.mode("overwrite").parquet(
+            f"{self.root}/batch_id={int(batch_id)}")
+        touch_liveness(self.root)
+
+    def compact(self, fold, *, keep_last: int = 0,
+                gc: bool = True) -> int | None:
+        """Fold the baseline and every live epoch except the newest
+        ``keep_last`` into a new baseline; returns its ``upto`` (None
+        when there is nothing to fold). ``fold`` maps the raw union of
+        state rows to the folded state — the ledger reader's combine.
+        With ``gc`` every superseded directory is deleted after the
+        baseline commits: folded epochs, replayed ghosts and torn
+        writes ≤ ``upto``, and older or uncommitted baselines."""
+        touch_liveness(self.root)
+        floor, listed = self._scan()
+        listed = [x for x in listed if x[0] > floor]
+        live = [e for e, _, ok in listed if ok]
+        if len(live) <= keep_last:
+            return None
+        upto = live[-(keep_last + 1)]
+        torn = [e for e, _, ok in listed if not ok]
+        if torn:
+            upto = min(upto, torn[0] - 1)
+        srcs = [p for e, p, ok in listed if ok and e <= upto]
+        if not srcs:
+            return None
+        if floor >= 0:
+            srcs.insert(0, f"{self.root}/_compacted/upto={floor}")
+        fold(self.spark.read.parquet(*srcs)).write.mode("overwrite") \
+            .parquet(f"{self.root}/_compacted/upto={upto}")
+        if gc:
+            for e, p, _ in self._list(_EPOCH_RE):
+                if e <= upto:
+                    self.fs.delete(_jp(self.spark, p), True)
+            for st in self.fs.listStatus(
+                    _jp(self.spark, self.root, "_compacted")):
+                if st.getPath().getName() != f"upto={upto}":
+                    self.fs.delete(st.getPath(), True)
+        return upto
+
+
 def committed_batch_dirs(spark: SparkSession, root: str) -> dict[str, str]:
     """{batch_id (with the "b" prefix): path} for every COMMITTED
     (_SUCCESS-marked) ``batch_id=`` directory under ``root``. Torn
-    writes stay invisible until their replay overwrites them."""
+    writes stay invisible until their replay overwrites them.
+    Committed-but-EMPTY dirs are skipped too — reading one as the only
+    live path throws "Unable to infer schema"."""
     fs, jroot = _fs(spark, root)
-    if not fs.exists(jroot):
-        return {}
-    out: dict[str, str] = {}
-    for st in fs.listStatus(jroot):
-        name = st.getPath().getName()
-        if not name.startswith("batch_id="):
-            continue
-        if not fs.exists(_jp(spark, str(st.getPath().toString()),
-                             "_SUCCESS")):
-            continue
-        # skip committed-but-EMPTY dirs — reading one as the only live
-        # path throws "Unable to infer schema"
-        if not _has_data(fs, st.getPath()):
-            continue
-        out[name[len("batch_id="):]] = str(st.getPath().toString())
-    return out
+    return {b: p for b, p, ok in _children(spark, fs, jroot, _BATCH_RE)
+            if ok and _has_data(fs, _jp(spark, p))}
 
 
 def _newest_gen(spark: SparkSession, root: str):
     """(gen, baseline_path, folded_ids) of the newest FULLY committed
     generation (data + manifest), or None."""
     fs, _ = _fs(spark, root)
-    comp = _jp(spark, root, "_compacted")
-    if not fs.exists(comp):
+    gens = [(int(g), base) for g, base, ok in
+            _children(spark, fs, _jp(spark, root, "_compacted"), _GEN_RE)
+            if ok and fs.exists(_jp(spark, base, "_folded", "_SUCCESS"))]
+    if not gens:
         return None
-    best = None
-    for st in fs.listStatus(comp):
-        m = _GEN_RE.fullmatch(st.getPath().getName())
-        if not m:
-            continue
-        g = int(m.group(1))
-        base = str(st.getPath().toString())
-        if not fs.exists(_jp(spark, base, "_SUCCESS")):
-            continue
-        if not fs.exists(_jp(spark, base, "_folded", "_SUCCESS")):
-            continue
-        if best is None or g > best[0]:
-            best = (g, base)
-    if best is None:
-        return None
-    g, base = best
+    g, base = max(gens)
     folded = {r["batch_id"] for r in
               tiny_parquet_rows(spark, base + "/_folded")}
     return g, base, folded

@@ -29,8 +29,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..functions.vectors import cosine
-
 # Retrieval geometry — tuned in round 7 under the q126 recall@k gate
 # (the gate exists so these can move without silently degrading
 # retrieval; measured recall@5 on the uniform-random embeddings
@@ -794,35 +792,30 @@ def kmeans_fold_stats(df: DataFrame,
                       expect_sig: str | None = None) -> DataFrame:
     """Fold landed epoch stats into generation totals — exact decimal
     monoid per (cell, pos), with the generation stamp asserted
-    GLOBALLY (the _cm_epoch_fold pattern: a per-group check would
+    GLOBALLY (index_ledger.geometry_guard: a per-group check would
     miss two epochs of different generations whose populated cells
-    never share a group). The checked bit multiplies into ``n`` so
-    pruning can never elide it; the coalesce keeps an empty ledger a
-    no-op. ``expect_sig`` additionally pins the ledger to a KNOWN
-    generation (_kmeans_sig of the centroids the caller built
-    against): min==max alone would accept a stale but internally-
-    consistent ledger — e.g. a final-generation fold resumed over a
-    previous run's directory (ADVICE r7)."""
+    never share a group). The checked bit multiplies into ``n``; the
+    coalesce keeps an empty ledger a no-op. ``expect_sig``
+    additionally pins the ledger to a KNOWN generation (_kmeans_sig of
+    the centroids the caller built against): min==max alone would
+    accept a stale but internally-consistent ledger — e.g. a
+    final-generation fold resumed over a previous run's directory
+    (ADVICE r7)."""
+    from .index_ledger import geometry_guard
+
     cond = F.coalesce(F.min("sig") == F.max("sig"), F.lit(True))
     if expect_sig is not None:
         cond = cond & F.coalesce(F.min("sig") == F.lit(expect_sig),
                                  F.lit(True))
-    chk = df.agg(
-        F.when(
-            F.assert_true(
-                cond,
-                F.concat(F.lit("k-means generation mismatch across "
-                               "epochs"
-                               + (f" (expected {expect_sig})"
-                                  if expect_sig is not None else "")
-                               + ": "),
-                         F.concat_ws(" vs ", F.min("sig"),
-                                     F.max("sig")))).isNull(),
-            F.lit(1).cast("long")).alias("_sig_ok"))
-    return (df.crossJoin(F.broadcast(chk))
+    msg = F.concat(F.lit("k-means generation mismatch across epochs"
+                         + (f" (expected {expect_sig})"
+                            if expect_sig is not None else "")
+                         + ": "),
+                   F.concat_ws(" vs ", F.min("sig"), F.max("sig")))
+    return (geometry_guard(df, cond, msg)
             .groupBy("cell", "pos")
             .agg(F.sum("s").cast("decimal(38,18)").alias("s"),
-                 (F.sum("n") * F.first("_sig_ok")).cast("long").alias("n"),
+                 (F.sum("n") * F.first("_geom_ok")).cast("long").alias("n"),
                  F.sum("sum_qcos").cast("decimal(38,0)").alias("sum_qcos"),
                  F.min("sig").alias("sig")))
 

@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, source_ident
 from ..operators import dedup as dd
+from ..operators.index_ledger import EpochLedger
 from . import QuerySpec
 from .llmdata import (_SQL_NORM, _SQL_SHINGLES, _SQL_TOKS, _sql_band_conds,
                       _sql_hash15, _sql_minhash_mins,
@@ -763,17 +764,36 @@ ORDER BY qid, rank
 
 
 # ---------------------------------------------------------------------------
-# Q130: streaming mini-batch k-means lifecycle (VERDICT r6 ask #2).
-# The full 2-generation protocol — seed pick, generation 0 streamed
-# as 3 epochs of exact decimal sufficient statistics, ledger
-# COMPACTION, refine, generation 1 streamed as 3 epochs — must land
-# the IDENTICAL final clustering as the one-shot batch Lloyd fit
-# (q128), so the oracle is q128's margin-asserted numpy/Decimal
-# ground truth, unchanged: incremental == one-shot, driver-hashed
-# through a compaction. Epoch bodies are the stream's actual
-# foreachBatch function (streaming/pipeline.kmeans_epoch), driven
-# directly per the q127 lifecycle pattern.
+# Streaming-ledger lifecycles (q130, q133, q136-q140). Each drives a
+# streaming/pipeline epoch ledger (index_ledger.EpochLedger) through
+# the stream's own foreachBatch epoch body: three epochs land, a
+# compaction folds the first two mid-protocol (_land_epochs; q130
+# compacts between its generations, q140 not at all), and the live
+# fold is hashed against the one-shot oracle of its batch twin —
+# incremental == one-shot, oracle-checked THROUGH a compaction by an
+# external engine. Results are localCheckpoint-pinned: the fold
+# lazily scans ledger directories a later invocation's compaction GC
+# could delete (the q121 discipline).
 # ---------------------------------------------------------------------------
+
+def _land_epochs(spark: SparkSession, root: str, n: int, land,
+                 compact) -> None:
+    """``land(e)`` for every epoch in 0..n-1 the ledger at ``root``
+    still lacks (committed and compacted epochs would replay
+    byte-identically), then ``compact()`` right after epoch n-2, so
+    the final fold reads a baseline plus the last epoch."""
+    for e in EpochLedger(spark, root).pending(range(n)):
+        land(e)
+        if e == n - 2:
+            compact()
+
+
+# Q130: streaming mini-batch k-means, the full 2-generation protocol —
+# seed pick, generation 0 streamed as 3 epochs of exact decimal
+# sufficient statistics, COMPACTION, refine, generation 1 streamed as
+# 3 epochs — must land the IDENTICAL final clustering as the one-shot
+# batch Lloyd fit, so the oracle is q128's margin-asserted
+# numpy/Decimal ground truth, unchanged.
 
 def q_stream_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import literal_df
@@ -797,19 +817,9 @@ def q_stream_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     folded = None
     for gen in range(LLOYD_ITER):
         gdir = os.path.join(root, f"gen={gen}")
-        # resume/fast-forward: epochs at or below a committed
-        # compaction baseline were folded and their dirs GC'd —
-        # re-running them would land ignored ghosts (pure waste)
-        base = sp._max_compact(gdir)
-        floor = -1 if base is None else base
-        for e in range(_EPOCHS):
-            # a committed epoch's stats are a pure function of
-            # (slice rows, pinned generation) — the replay would
-            # overwrite byte-identical rows, so skip it. An EMPTY
-            # slice lands nothing and harmlessly re-runs.
-            if e <= floor or fs.exists(
-                    _jp(spark, gdir, f"batch_id={e}", "_SUCCESS")):
-                continue
+        # resume/fast-forward; an EMPTY slice lands nothing and
+        # harmlessly re-runs
+        for e in EpochLedger(spark, gdir).pending(range(_EPOCHS)):
             sp.kmeans_epoch(
                 vecs.filter(F.pmod(F.col("vec_id"), F.lit(_EPOCHS)) == e),
                 e, state_dir=gdir, centroids=cents)
@@ -818,15 +828,13 @@ def q_stream_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         if gen == LLOYD_ITER - 1:
             # expect= pins the final fold to THIS run's refined
             # generation — a stale but internally-consistent ledger
-            # (wrong-centroid resume) now fails loudly (ADVICE r7)
+            # (wrong-centroid resume) fails loudly
             folded = sp.read_kmeans_stats(spark, gdir, expect=cents)
             break
         # compaction sits INSIDE the checked lifecycle: the refine
         # below reads the folded baseline, not the raw epoch dirs
         sp.compact_kmeans(spark, gdir)
         cents = sp.read_kmeans_centroids(spark, gdir, cents)
-    # pin: the fold lazily scans ledger directories a later
-    # invocation's compaction GC could delete (q121 discipline)
     return (folded.filter(F.col("pos") == 0)
             .select("cell", F.col("n").alias("n_vecs"),
                     F.col("sum_qcos").cast("long").alias("sum_cos_u6"))
@@ -834,27 +842,17 @@ def q_stream_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_stream_kmeans() -> str:
-    # incremental == one-shot: the streamed protocol must land q128's
-    # exact clustering, so the oracle IS q128's ground-truth replay
     from .groundtruth import oracle_lloyd_kmeans
 
     return oracle_lloyd_kmeans()
 
 
-# ---------------------------------------------------------------------------
-# Q133: streaming distribution-drift lifecycle (VERDICT r7 ask #6).
-# The q132 monitor, rebuilt the way an ingest actually runs it: each
-# epoch's quality histogram lands from the stream's foreachBatch body
-# (streaming/pipeline.drift_epoch), a compaction folds the first two
-# epochs mid-protocol, and the live view (read_drift) computes the
-# exact integer TV statistic — hashed against q132's one-shot oracle,
-# so incremental == one-shot is driver-checked THROUGH a compaction
-# (the q130-vs-q128 pattern applied to the quality tier).
-# ---------------------------------------------------------------------------
+# Q133: the q132 drift monitor, rebuilt the way an ingest runs it —
+# per-epoch quality histograms, and the live view's exact integer TV
+# statistic hashed against q132's oracle.
 
 def q_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import quality_score
-    from ..operators.index_ledger import _fs, _jp
     from ..streaming import pipeline as sp
     from .quality_q import DRIFT_BINS, DRIFT_EPOCHS
 
@@ -865,59 +863,36 @@ def q_stream_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("_e"),
         quality_score("text").alias("q"))
     root = _index_root(sf_dir, f"driftb{DRIFT_BINS}m{DRIFT_EPOCHS}")
-    fs, _ = _fs(spark, root)
-    base = sp._max_compact(root)
-    floor = -1 if base is None else base
-    for e in range(DRIFT_EPOCHS):
-        # committed epochs replay byte-identically — skip them; epochs
-        # at or below a compaction baseline were folded and GC'd
-        if e <= floor or fs.exists(
-                _jp(spark, root, f"batch_id={e}", "_SUCCESS")):
-            continue
-        sp.drift_epoch(scored.filter(F.col("_e") == e), e,
-                       state_dir=root, value="q", n_bins=DRIFT_BINS)
-        if e == DRIFT_EPOCHS - 2:
-            # compaction sits INSIDE the checked lifecycle: the final
-            # fold reads the folded baseline + the last epoch's dir
-            sp.compact_drift(spark, root)
+    _land_epochs(
+        spark, root, DRIFT_EPOCHS,
+        lambda e: sp.drift_epoch(scored.filter(F.col("_e") == e), e,
+                                 state_dir=root, value="q",
+                                 n_bins=DRIFT_BINS),
+        lambda: sp.compact_drift(spark, root))
     out = sp.read_drift(spark, root, baseline=0)
     # same output contract (and long-cast bound) as q132 — the oracle
     # is shared, see quality_q.q_quality_drift
     return (out.select(F.col("epoch"),
                        F.col("n_rows").cast("long").alias("n_docs"),
                        F.col("tv_num").cast("long").alias("tv_num_vs_e0"))
-            .orderBy("epoch")
-            # pin: the fold lazily scans ledger directories a later
-            # invocation's compaction GC could delete (q121 discipline)
-            .localCheckpoint())
+            .orderBy("epoch").localCheckpoint())
 
 
 def _oracle_stream_drift() -> str:
-    # incremental == one-shot: the streamed ledger must reproduce the
-    # q132 batch monitor exactly, so the oracle IS q132's
     from .quality_q import _oracle_quality_drift
 
     return _oracle_quality_drift()
 
 
-# ---------------------------------------------------------------------------
-# Q136: streaming KMV distinct-count lifecycle — the sketch tier's
-# last streaming gap (CM frequencies had stream_token_sketch + q-level
-# checks; KMV distinct counts had only the expression-level merge).
-# Three ingest epochs of events land their own per-group KMV sketches
-# (streaming/pipeline.kmv_epoch), a compaction folds the first two
-# mid-protocol, and the live fold's ESTIMATES are hashed against
-# q115's one-shot oracle — legal because the KMV merge is EXACT (the
-# k smallest distinct hashes of a union are among the union of each
-# slice's k smallest), so incremental == one-shot is driver-checked
-# THROUGH a compaction, to the bit, by an external engine.
-# ---------------------------------------------------------------------------
+# Q136: KMV distinct counts — per-group sketches per epoch; the live
+# fold's ESTIMATES hash against q115's one-shot oracle, to the bit,
+# because the KMV merge is EXACT (the k smallest distinct hashes of a
+# union are among the union of each slice's k smallest).
 
 _KMV_EPOCHS = 3
 
 
 def q_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.index_ledger import _fs, _jp
     from ..operators.sketches import KMV_K, kmv_estimate_expr
     from ..streaming import pipeline as sp
 
@@ -926,23 +901,14 @@ def q_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
                        table="events")
     sliced = ev.withColumn(
         "_e", F.pmod(F.col("event_id"), F.lit(_KMV_EPOCHS)).cast("int"))
-    fs, _ = _fs(spark, root)
-    base = sp._max_compact(root)
-    floor = -1 if base is None else base
-    for e in range(_KMV_EPOCHS):
-        # committed epochs replay byte-identically — skip them; epochs
-        # at or below a compaction baseline were folded and GC'd
-        if e <= floor or fs.exists(
-                _jp(spark, root, f"batch_id={e}", "_SUCCESS")):
-            continue
-        sp.kmv_epoch(sliced.filter(F.col("_e") == e), e, state_dir=root,
-                     keys={"users": "user_id", "events": "event_id"},
-                     group_cols=["event_type"],
-                     salts={"users": "kmvu", "events": "kmve"})
-        if e == _KMV_EPOCHS - 2:
-            # compaction sits INSIDE the checked lifecycle: the final
-            # fold reads the folded baseline + the last epoch's dir
-            sp.compact_kmv_sketch(spark, root, ["event_type"])
+    _land_epochs(
+        spark, root, _KMV_EPOCHS,
+        lambda e: sp.kmv_epoch(
+            sliced.filter(F.col("_e") == e), e, state_dir=root,
+            keys={"users": "user_id", "events": "event_id"},
+            group_cols=["event_type"],
+            salts={"users": "kmvu", "events": "kmve"}),
+        lambda: sp.compact_kmv_sketch(spark, root, ["event_type"]))
     sk = sp.read_kmv_sketch(spark, root, ["event_type"])
     wide = (sk.groupBy("event_type")
             .pivot("kind", ["users", "events"]).agg(F.first("sketch")))
@@ -950,8 +916,7 @@ def q_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("user_id").alias("exact_users"),
         F.countDistinct("event_id").alias("exact_events"))
     # q115's exact output contract — same estimator over the STREAMED
-    # ledger's fold; pin: the fold lazily scans ledger directories a
-    # later invocation's compaction GC could delete (q121 discipline)
+    # ledger's fold
     return (exact.join(wide, "event_type")
             .select("event_type", "exact_users",
                     kmv_estimate_expr(F.col("users")).alias("est_users"),
@@ -961,32 +926,21 @@ def q_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_stream_kmv() -> str:
-    # incremental == one-shot: the streamed ledger's fold must equal
-    # the one-shot sketch bit-for-bit, so the oracle IS q115's
     from .warehouse import _oracle_kmv_distinct
 
     return _oracle_kmv_distinct()
 
 
-# ---------------------------------------------------------------------------
-# Q137: streaming count-min lifecycle — the CM frequency ledger
-# (stream_token_sketch, the oldest epoch ledger in the repo) was
-# pytest-proven but never driver-checked; q136 closed the same gap
-# for KMV, this closes it for CM. Three document epochs land their
-# own token sketches, a compaction folds the first two mid-protocol,
-# and the folded sketch's heavy-hitter estimates are hashed against
-# q117's one-shot oracle — legal because counters are plain sums
-# (per-epoch occurrence sketches add up to exactly the one-shot
-# weighted sketch), so incremental == one-shot is driver-checked
-# THROUGH a compaction by an external engine.
-# ---------------------------------------------------------------------------
+# Q137: count-min frequencies — per-epoch token sketches; the folded
+# sketch's heavy-hitter estimates hash against q117's one-shot oracle
+# (counters are plain sums: per-epoch occurrence sketches add up to
+# exactly the one-shot weighted sketch).
 
 _CM_EPOCHS = 3
 
 
 def q_stream_cm(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.text import tokens
-    from ..operators.index_ledger import _fs, _jp
     from ..operators.sketches import CM_DEPTH, CM_WIDTH, cm_estimate
     from ..streaming import pipeline as sp
     from .llmdata import _CM_TOPK
@@ -995,25 +949,14 @@ def q_stream_cm(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _index_root(sf_dir, f"cmled{CM_DEPTH}x{CM_WIDTH}m{_CM_EPOCHS}")
     sliced = docs.withColumn(
         "_e", F.pmod(F.col("doc_id"), F.lit(_CM_EPOCHS)).cast("int"))
-    fs, _ = _fs(spark, root)
-    base = sp._max_compact(root)
-    floor = -1 if base is None else base
-    for e in range(_CM_EPOCHS):
-        # committed epochs replay byte-identically — skip them; epochs
-        # at or below a compaction baseline were folded and GC'd
-        if e <= floor or fs.exists(
-                _jp(spark, root, f"batch_id={e}", "_SUCCESS")):
-            continue
-        sp.cm_epoch(sliced.filter(F.col("_e") == e), e, sketch_dir=root)
-        if e == _CM_EPOCHS - 2:
-            # compaction sits INSIDE the checked lifecycle: the final
-            # fold reads the folded baseline + the last epoch's dir
-            sp.compact_token_sketch(spark, root)
+    _land_epochs(
+        spark, root, _CM_EPOCHS,
+        lambda e: sp.cm_epoch(sliced.filter(F.col("_e") == e), e,
+                              sketch_dir=root),
+        lambda: sp.compact_token_sketch(spark, root))
     sk = sp.read_token_sketch(spark, root)
     # q117's exact output contract — the true top-k from the batch
-    # table, estimated against the STREAMED ledger's folded counters;
-    # pin: the fold lazily scans ledger directories a later
-    # invocation's compaction GC could delete (q121 discipline)
+    # table, estimated against the STREAMED ledger's folded counters
     tc = (docs.select(F.explode(tokens("text")).alias("tok"))
           .groupBy("tok").agg(F.count(F.lit(1)).alias("true_cnt")))
     top = tc.orderBy(F.desc("true_cnt"), "tok").limit(_CM_TOPK)
@@ -1024,27 +967,17 @@ def q_stream_cm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_stream_cm() -> str:
-    # incremental == one-shot: per-epoch occurrence counters sum to
-    # exactly the one-shot weighted sketch, so the oracle IS q117's
     from .llmdata import _oracle_cm_heavy_hitters
 
     return _oracle_cm_heavy_hitters()
 
 
-# ---------------------------------------------------------------------------
-# Q138: streaming matview lifecycle — q119 proves the matview monoid
-# by merging three epoch STATES in memory; the landed ledger route
-# (stream_matview → parquet epochs → compaction → read_matview fold)
-# was pytest-proven but never driver-checked. Same protocol as
-# q136/q137: the q119 date-cut epochs land their algebraic states
-# under the epoch-directory ledger, a compaction folds the first two
-# mid-protocol, and the folded state finalizes into q119's EXACT
-# output contract — hashed against q119's one-shot oracle (legal by
+# Q138: maintained aggregate — the q119 date-cut epochs land their
+# algebraic states, and the folded state finalizes into q119's EXACT
+# output contract, hashed against q119's one-shot oracle (legal by
 # the decimal monoid: fold order cannot drift the sums).
-# ---------------------------------------------------------------------------
 
 def q_stream_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.index_ledger import _fs, _jp
     from ..operators.matview import finalize_state
     from ..streaming import pipeline as sp
     from .quality_q import _EPOCH_CUTS, _prepared_orders
@@ -1060,25 +993,14 @@ def q_stream_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     keys = ["status", "yr"]
     root = _index_root(sf_dir, f"mvled{len(slices)}", table="orders")
-    fs, _ = _fs(spark, root)
-    mc = sp._max_compact(root)
-    floor = -1 if mc is None else mc
-    for e, sl in enumerate(slices):
-        # committed epochs replay byte-identically — skip them; epochs
-        # at or below a compaction baseline were folded and GC'd
-        if e <= floor or fs.exists(
-                _jp(spark, root, f"batch_id={e}", "_SUCCESS")):
-            continue
-        sp.matview_epoch(sl.drop("o_orderdate"), e, state_dir=root,
-                         keys=keys, value="price")
-        if e == len(slices) - 2:
-            # compaction sits INSIDE the checked lifecycle: the final
-            # fold reads the folded baseline + the last epoch's dir
-            sp.compact_matview(spark, root, keys)
+    _land_epochs(
+        spark, root, len(slices),
+        lambda e: sp.matview_epoch(slices[e].drop("o_orderdate"), e,
+                                   state_dir=root, keys=keys,
+                                   value="price"),
+        lambda: sp.compact_matview(spark, root, keys))
     state = sp.read_matview(spark, root, keys)
-    # q119's exact output contract (and std_cents floor convention);
-    # pin: the fold lazily scans ledger directories a later
-    # invocation's compaction GC could delete (q121 discipline)
+    # q119's exact output contract (and std_cents floor convention)
     return (finalize_state(state)
             .select("status", "yr",
                     F.col("n").alias("n_orders"),
@@ -1092,28 +1014,19 @@ def q_stream_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_stream_matview() -> str:
-    # incremental == one-shot by the decimal matview monoid, so the
-    # oracle IS q119's one-shot aggregate
     from .quality_q import ORACLE_INCREMENTAL_MV
 
     return ORACLE_INCREMENTAL_MV
 
 
-# ---------------------------------------------------------------------------
-# Q139: streaming expectations lifecycle — q118's ingest-time twin
-# (stream_expectations) landed per-epoch reports but was pytest-only,
-# and its fold semantics deserve a driver check precisely because
-# they are SUBTLE: per-epoch violation counts sum to the one-shot
-# suite ONLY for epoch-distributive rules (row predicates,
-# domain/range, FK against a static dim). The non-distributive rule
-# — tuple uniqueness, whose cross-epoch duplicates are invisible to
-# every single epoch — is deliberately excluded here and loudly
-# documented (cross-history uniqueness is the exact-dedup ledger's
-# job, q122). Three orderkey-sliced epochs land their reports, a
-# compaction folds the first two mid-protocol (epochs stay apart,
-# the audit-trail contract), and the folded corpus-lifetime totals
-# hash against the one-shot suite over the whole table.
-# ---------------------------------------------------------------------------
+# Q139: expectations — per-epoch violation reports (epochs stay apart
+# through compaction, the audit-trail contract), and the folded
+# corpus-lifetime totals hash against the one-shot suite over the
+# whole table. Per-epoch counts sum to the one-shot suite ONLY for
+# epoch-distributive rules (row predicates, domain/range, FK against a
+# static dim); tuple uniqueness, whose cross-epoch duplicates are
+# invisible to every single epoch, is deliberately excluded
+# (cross-history uniqueness is the exact-dedup ledger's job, q122).
 
 _EXP_EPOCHS = 3
 
@@ -1121,7 +1034,6 @@ _EXP_EPOCHS = 3
 def q_stream_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.expectations import (expect, expect_foreign_key,
                                           expect_in_set, expect_not_null)
-    from ..operators.index_ledger import _fs, _jp
     from ..streaming import pipeline as sp
 
     orders = load_table(spark, sf_dir, "orders")
@@ -1137,27 +1049,17 @@ def q_stream_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _index_root(sf_dir, f"expled{_EXP_EPOCHS}", table="orders")
     sliced = orders.withColumn(
         "_e", F.pmod(F.col("o_orderkey"), F.lit(_EXP_EPOCHS)).cast("int"))
-    fs, _ = _fs(spark, root)
-    mc = sp._max_compact(root)
-    floor = -1 if mc is None else mc
-    for e in range(_EXP_EPOCHS):
-        # committed epochs replay byte-identically — skip them; epochs
-        # at or below a compaction baseline were folded and GC'd
-        if e <= floor or fs.exists(
-                _jp(spark, root, f"batch_id={e}", "_SUCCESS")):
-            continue
-        sp.expectations_epoch(sliced.filter(F.col("_e") == e).drop("_e"),
-                              e, report_dir=root, checks=checks)
-        if e == _EXP_EPOCHS - 2:
-            # compaction sits INSIDE the checked lifecycle: the final
-            # fold reads the folded baseline + the last epoch's dir
-            sp.compact_expectations(spark, root)
+    _land_epochs(
+        spark, root, _EXP_EPOCHS,
+        lambda e: sp.expectations_epoch(
+            sliced.filter(F.col("_e") == e).drop("_e"), e,
+            report_dir=root, checks=checks),
+        lambda: sp.compact_expectations(spark, root))
     # the reader pins the ledger's checks-list fingerprint to the
-    # very suite it is asking about (round-9 geometry discipline)
+    # very suite it is asking about
     out = sp.read_expectations(spark, root, folded=True, checks=checks)
     # q118's output contract (minus the non-distributive uniqueness
-    # rule); pin: the fold lazily scans ledger directories a later
-    # invocation's compaction GC could delete (q121 discipline)
+    # rule)
     return (out.withColumnRenamed("check", "check_name")
             .orderBy("check_name").localCheckpoint())
 
@@ -1205,26 +1107,18 @@ ORDER BY check_name
 """
 
 
-# ---------------------------------------------------------------------------
-# Q140: streaming shard-export lifecycle — the export lake is a DATA
-# ledger (actual training-shard files), so its checkable contract is
-# the RECEIPT: the per-shard manifest (counts, char totals, interior
-# order bounds, order-insensitive fingerprint checksum) over the
-# multi-epoch streamed lake must equal the one-shot q108 manifest of
-# the whole corpus — assignment is a pure key hash, so which epoch
-# delivered a document can never move it or change any receipt
-# column. Three doc epochs land through the shared shard_epoch body;
-# the combined lake's manifest hashes against q108's oracle. (No
-# compaction step: shard files are data, not foldable state — file
-# compaction is functions/layout.compact_parquet's job.)
-# ---------------------------------------------------------------------------
+# Q140: shard export — the export lake is a DATA ledger (actual
+# training-shard files), so its checkable contract is the RECEIPT:
+# the per-shard manifest over the multi-epoch streamed lake must equal
+# the one-shot q108 manifest of the whole corpus — assignment is a
+# pure key hash, so which epoch delivered a document can never move
+# it. No compaction step: shard files are data, not foldable state.
 
 _SH_EPOCHS = 3
 
 
 def q_stream_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.curation import shard_manifest
-    from ..operators.index_ledger import _fs, _jp
     from ..streaming import pipeline as sp
     from .curation_q import N_SHARDS
 
@@ -1232,24 +1126,18 @@ def q_stream_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _index_root(sf_dir, f"shled{N_SHARDS}m{_SH_EPOCHS}")
     sliced = docs.withColumn(
         "_e", F.pmod(F.col("doc_id"), F.lit(_SH_EPOCHS)).cast("int"))
-    fs, _ = _fs(spark, root)
-    for e in range(_SH_EPOCHS):
-        # committed epochs replay byte-identically — skip them
-        if fs.exists(_jp(spark, root, f"batch_id={e}", "_SUCCESS")):
-            continue
+    # committed epochs replay byte-identically — skip them
+    for e in EpochLedger(spark, root).pending(range(_SH_EPOCHS)):
         sp.shard_epoch(sliced.filter(F.col("_e") == e).drop("_e"), e,
                        out_dir=root, key="doc_id", n_shards=N_SHARDS)
     lake = spark.read.parquet(root)
-    # q108's exact output contract over the streamed lake; pin: the
-    # manifest lazily scans lake directories (q121 discipline)
+    # q108's exact output contract over the streamed lake
     return (shard_manifest(
         lake.select("doc_id", "text", "shard", "ord_key"))
         .localCheckpoint())
 
 
 def _oracle_stream_shards() -> str:
-    # the streamed lake's receipt must equal the one-shot manifest,
-    # so the oracle IS q108's
     from .curation_q import ORACLE_SHARD_MANIFEST
 
     return ORACLE_SHARD_MANIFEST

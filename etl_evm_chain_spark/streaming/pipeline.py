@@ -21,6 +21,7 @@ shared code, not a streaming fork).
 
 from __future__ import annotations
 
+import os
 from typing import Iterator
 
 import pandas as pd
@@ -29,7 +30,37 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..operators.index_ledger import EpochLedger, geometry_guard
 from ..sources.abi import RAW_LOG_SCHEMA, AbiEvent, decode_event
+
+
+def _foreach_batch(df: DataFrame, per_batch, checkpoint: str,
+                   trigger_once: bool):
+    """Start ``df``'s foreachBatch stream with its offset checkpoint;
+    ``trigger_once`` drains what is available and stops."""
+    w = (df.writeStream.foreachBatch(per_batch)
+         .option("checkpointLocation", checkpoint))
+    if trigger_once:
+        w = w.trigger(availableNow=True)
+    return w.start()
+
+
+def _stream_index(df: DataFrame, update, *, out_dir: str, checkpoint: str,
+                  trigger_once: bool):
+    """foreachBatch runner of a landed-index ingest: ``update(batch_df,
+    batch_id)`` increments the index (its ``batch_id=b<epoch>/``
+    directory overwritten on replay) and returns the batch's result,
+    which lands under ``out_dir/batch_id=<epoch>/``, also overwritten
+    on replay. foreachBatch is at-least-once; a crashed-and-replayed
+    epoch still converges to one copy of both — the partition
+    directory IS the ledger entry. An empty micro-batch is a no-op."""
+    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        update(batch_df, str(int(batch_id))).write.mode("overwrite") \
+            .parquet(os.path.join(out_dir, f"batch_id={int(batch_id)}"))
+
+    return _foreach_batch(df, per_batch, checkpoint, trigger_once)
 
 
 def stream_raw_logs(spark: SparkSession, path: str) -> DataFrame:
@@ -254,11 +285,7 @@ def write_jdbc_exactly_once(decoded: DataFrame, url: str, *,
          .option("url", url).option("dbtable", table)
          .options(**opts).save())
 
-    w = (decoded.writeStream.foreachBatch(sink)
-         .option("checkpointLocation", checkpoint))
-    if trigger_once:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _foreach_batch(decoded, sink, checkpoint, trigger_once)
 
 
 def stream_interval_join(left: DataFrame, right: DataFrame, *,
@@ -317,15 +344,10 @@ def stream_near_dups(docs: DataFrame, *, index_path: str, pairs_dir: str,
 
     ``foreachBatch`` is the right primitive here — the per-batch work
     is a batch join against a growing external index, not a
-    watermarkable stream-stream join. foreachBatch is AT-LEAST-once,
-    so exactly-once must come from idempotent writes keyed by the
-    checkpoint's epoch id: the index increment lands under
-    ``batch_id=b<epoch>/band=*/`` (update_near_dup_index OVERWRITES
-    that directory on replay) and the pair rows land under
-    ``batch_id=<epoch>/`` in ``pairs_dir``, also overwrite-on-replay.
-    A crashed-and-replayed epoch therefore converges to exactly one
-    copy of its index rows and its pairs — no ledger table needed,
-    the partition directory IS the ledger entry.
+    watermarkable stream-stream join. Exactly-once by overwrite on
+    replay (:func:`_stream_index`): the index increment under
+    ``batch_id=b<epoch>/band=*/``, the pair rows under
+    ``batch_id=<epoch>/`` in ``pairs_dir``.
 
     Exactly-once scope: the INDEX is exactly-once; pairs are
     idempotent per batch_id directory but NOT globally unique — a
@@ -339,25 +361,13 @@ def stream_near_dups(docs: DataFrame, *, index_path: str, pairs_dir: str,
     no unbounded executor state, unlike a dropDuplicates over all
     history.
     """
-    import os
-
     from ..operators.dedup import update_near_dup_index
 
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        pairs = update_near_dup_index(
-            spark, batch_df, index_path, id_col=id_col, text_col=text_col,
-            batch_id=str(batch_id))
-        pairs.write.mode("overwrite").parquet(
-            os.path.join(pairs_dir, f"batch_id={int(batch_id)}"))
-
-    w = (docs.writeStream.foreachBatch(per_batch)
-         .option("checkpointLocation", checkpoint))
-    if trigger_once:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _stream_index(
+        docs, lambda b, bid: update_near_dup_index(
+            b.sparkSession, b, index_path, id_col=id_col,
+            text_col=text_col, batch_id=bid),
+        out_dir=pairs_dir, checkpoint=checkpoint, trigger_once=trigger_once)
 
 
 def stream_ann_ingest(vecs: DataFrame, *, index_path: str,
@@ -373,12 +383,8 @@ def stream_ann_ingest(vecs: DataFrame, *, index_path: str,
     everything ingested so far under ``batch_id=<epoch>/`` in
     ``neighbors_dir``.
 
-    Exactly-once exactly as the dedup twins: foreachBatch is
-    at-least-once, and both writes are overwrite-on-replay keyed by
-    the checkpoint's epoch id (the index increment under
-    ``batch_id=b<epoch>/cell=N/``, the neighbor rows under their
-    ``batch_id=<epoch>`` directory) — the partition directory IS the
-    ledger entry. Neighbor semantics are as-of-arrival: a batch's
+    Exactly-once as stream_near_dups (the index increment under
+    ``batch_id=b<epoch>/cell=N/``). Neighbor semantics are as-of-arrival: a batch's
     top-k sees every EARLIER vector but not later ones, the contract
     an ingest-time enrichment wants; a full-history re-query is
     ivf_topk over the final lake. Streaming equals the manual
@@ -388,27 +394,15 @@ def stream_ann_ingest(vecs: DataFrame, *, index_path: str,
     cell-partitioned parquet lake, per-batch cost is O(batch) map-only
     assignment + a probe join pruned to the batch's touched cells.
     """
-    import os
-
     from ..operators.similarity import update_ann_index
 
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        extra = {} if n_assign is None else {"n_assign": n_assign}
-        nbrs = update_ann_index(
-            spark, batch_df, index_path, id_col=id_col, vec_col=vec_col,
-            k=k, n_cells=n_cells, n_probe=n_probe,
-            batch_id=str(batch_id), **extra)
-        nbrs.write.mode("overwrite").parquet(
-            os.path.join(neighbors_dir, f"batch_id={int(batch_id)}"))
-
-    w = (vecs.writeStream.foreachBatch(per_batch)
-         .option("checkpointLocation", checkpoint))
-    if trigger_once:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    extra = {} if n_assign is None else {"n_assign": n_assign}
+    return _stream_index(
+        vecs, lambda b, bid: update_ann_index(
+            b.sparkSession, b, index_path, id_col=id_col, vec_col=vec_col,
+            k=k, n_cells=n_cells, n_probe=n_probe, batch_id=bid, **extra),
+        out_dir=neighbors_dir, checkpoint=checkpoint,
+        trigger_once=trigger_once)
 
 
 def stream_pq_ingest(vecs: DataFrame, *, index_path: str,
@@ -425,11 +419,8 @@ def stream_pq_ingest(vecs: DataFrame, *, index_path: str,
     batch's top-k neighbors against everything ingested so far under
     ``batch_id=<epoch>/`` in ``neighbors_dir``.
 
-    Exactly-once exactly as the dedup/ANN twins: foreachBatch is
-    at-least-once, and both writes are overwrite-on-replay keyed by
-    the checkpoint's epoch id (codes under ``batch_id=b<epoch>/``,
-    neighbors under ``batch_id=<epoch>``) — the partition directory
-    IS the ledger entry. Neighbor semantics are as-of-arrival, the
+    Exactly-once as stream_near_dups (codes under
+    ``batch_id=b<epoch>/``). Neighbor semantics are as-of-arrival, the
     ingest-time enrichment contract; a full-history re-query is one
     ``_adc_topk_codes`` over the final lake. Streaming equals the
     manual batch loop bit-for-bit (tested).
@@ -438,8 +429,6 @@ def stream_pq_ingest(vecs: DataFrame, *, index_path: str,
     bucket-partitioned codes lake (~40 B/vector), per-batch cost is
     one encode pass plus the chunked ADC probe of landed codes.
     """
-    import os
-
     from ..operators.similarity import (PQ_CENTS, PQ_SUB,
                                         PQ_TRAIN_ITER, update_pq_index)
 
@@ -448,21 +437,12 @@ def stream_pq_ingest(vecs: DataFrame, *, index_path: str,
           "train_iter": (PQ_TRAIN_ITER if train_iter is None
                          else train_iter)}
 
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        nbrs = update_pq_index(
-            spark, batch_df, index_path, id_col=id_col,
-            vec_col=vec_col, k=k, batch_id=str(batch_id), **kw)
-        nbrs.write.mode("overwrite").parquet(
-            os.path.join(neighbors_dir, f"batch_id={int(batch_id)}"))
-
-    w = (vecs.writeStream.foreachBatch(per_batch)
-         .option("checkpointLocation", checkpoint))
-    if trigger_once:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _stream_index(
+        vecs, lambda b, bid: update_pq_index(
+            b.sparkSession, b, index_path, id_col=id_col, vec_col=vec_col,
+            k=k, batch_id=bid, **kw),
+        out_dir=neighbors_dir, checkpoint=checkpoint,
+        trigger_once=trigger_once)
 
 
 def stream_ivfpq_ingest(vecs: DataFrame, *, index_path: str,
@@ -484,12 +464,8 @@ def stream_ivfpq_ingest(vecs: DataFrame, *, index_path: str,
     lands the batch's probe-pruned top-k neighbors against everything
     ingested so far under ``batch_id=<epoch>/`` in ``neighbors_dir``.
 
-    Exactly-once exactly as the other ingest twins: foreachBatch is
-    at-least-once, and both writes are overwrite-on-replay keyed by
-    the checkpoint's epoch id (codes under
-    ``batch_id=b<epoch>/cell=<n>/``, neighbors under
-    ``batch_id=<epoch>``) — the partition directory IS the ledger
-    entry. Neighbor semantics are as-of-arrival, the ingest-time
+    Exactly-once as stream_near_dups (codes under
+    ``batch_id=b<epoch>/cell=<n>/``). Neighbor semantics are as-of-arrival, the ingest-time
     enrichment contract; a full-history re-query is one
     ``_ivfpq_adc_topk`` over the final lake. Streaming equals the
     manual batch loop bit-for-bit (tested).
@@ -499,8 +475,6 @@ def stream_ivfpq_ingest(vecs: DataFrame, *, index_path: str,
     encode pass + map-only soft assignment + a chunked ADC probe that
     parquet-prunes to the batch's probed cells.
     """
-    import os
-
     from ..operators.similarity import (IVF_ASSIGN, IVF_CELLS,
                                         IVF_PROBE, PQ_CENTS, PQ_SUB,
                                         PQ_TRAIN_ITER,
@@ -514,21 +488,12 @@ def stream_ivfpq_ingest(vecs: DataFrame, *, index_path: str,
           "train_iter": (PQ_TRAIN_ITER if train_iter is None
                          else train_iter)}
 
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        nbrs = update_ivfpq_index(
-            spark, batch_df, index_path, id_col=id_col,
-            vec_col=vec_col, k=k, batch_id=str(batch_id), **kw)
-        nbrs.write.mode("overwrite").parquet(
-            os.path.join(neighbors_dir, f"batch_id={int(batch_id)}"))
-
-    w = (vecs.writeStream.foreachBatch(per_batch)
-         .option("checkpointLocation", checkpoint))
-    if trigger_once:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _stream_index(
+        vecs, lambda b, bid: update_ivfpq_index(
+            b.sparkSession, b, index_path, id_col=id_col, vec_col=vec_col,
+            k=k, batch_id=bid, **kw),
+        out_dir=neighbors_dir, checkpoint=checkpoint,
+        trigger_once=trigger_once)
 
 
 def stream_ivfpq_deletes(ids: DataFrame, *, index_path: str,
@@ -537,11 +502,8 @@ def stream_ivfpq_deletes(ids: DataFrame, *, index_path: str,
     """Forget-me requests AT STREAM TIME: each micro-batch of ids
     tombstones the landed IVF-PQ index
     (operators/similarity.delete_from_ivfpq_index) — the deletion
-    twin of stream_ivfpq_ingest, so a privacy queue drains into the
-    index with the same exactly-once discipline as the ingest side:
-    foreachBatch is at-least-once and each epoch OVERWRITES its own
-    ``tombs/batch_id=b<epoch>/`` directory on replay (the tombstone
-    batch is a pure function of the micro-batch's ids). Deleted
+    twin of stream_ivfpq_ingest, exactly-once the same way (each epoch
+    overwrites its ``tombs/batch_id=b<epoch>/`` on replay). Deleted
     vectors stop surfacing immediately on every read path; the next
     full compaction applies them physically. An empty micro-batch is
     a no-op; a batch arriving before the index exists FAILS the
@@ -556,11 +518,7 @@ def stream_ivfpq_deletes(ids: DataFrame, *, index_path: str,
                                 index_path, id_col=id_col,
                                 batch_id=str(batch_id))
 
-    w = (ids.writeStream.foreachBatch(per_batch)
-         .option("checkpointLocation", checkpoint))
-    if trigger_once:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _foreach_batch(ids, per_batch, checkpoint, trigger_once)
 
 
 def stream_export_shards(docs: DataFrame, *, out_dir: str, checkpoint: str,
@@ -573,23 +531,16 @@ def stream_export_shards(docs: DataFrame, *, out_dir: str, checkpoint: str,
     which batch delivered it, and re-exporting after growth never
     moves old documents between shards.
 
-    Exactly-once like stream_near_dups: foreachBatch is at-least-once,
-    so each epoch OVERWRITES its own batch_id partition directory on
-    replay — the directory is the ledger entry. Readers see one lake
-    with (batch_id, shard) partition columns; the global receipt is
-    ``shard_manifest(spark.read.parquet(out_dir))`` (checksums are
-    order- and batch-insensitive sums, so incremental and one-shot
-    exports agree — tested).
+    Exactly-once like stream_near_dups (overwrite on replay). Readers
+    see one lake with (batch_id, shard) partition columns; the global
+    receipt is ``shard_manifest(spark.read.parquet(out_dir))``
+    (checksums are order- and batch-insensitive sums, so incremental
+    and one-shot exports agree — tested).
     """
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        shard_epoch(batch_df, batch_id, out_dir=out_dir, key=key,
-                    n_shards=n_shards, salt=salt)
-
-    w = (docs.writeStream.foreachBatch(per_batch)
-         .option("checkpointLocation", checkpoint))
-    if trigger_once:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _foreach_batch(
+        docs, lambda b, e: shard_epoch(b, e, out_dir=out_dir, key=key,
+                                       n_shards=n_shards, salt=salt),
+        checkpoint, trigger_once)
 
 
 def shard_epoch(batch_df: DataFrame, batch_id: int, *, out_dir: str,
@@ -598,12 +549,9 @@ def shard_epoch(batch_df: DataFrame, batch_id: int, *, out_dir: str,
     """One shard-export epoch: the batch's deterministic shard
     assignment landed under ``out_dir/batch_id=<epoch>/shard=<N>/`` —
     the shared body of stream_export_shards' foreachBatch closure AND
-    the q140 lifecycle query. Assignment is a pure hash of the key,
-    so a replayed epoch overwrites its directory with identical
-    files (exactly-once) and late growth never moves old documents
+    the q140 lifecycle query. Assignment is a pure hash of the key, so
+    replays are exactly-once and late growth never moves old documents
     between shards."""
-    import os
-
     from ..operators.curation import shard_assignment
     from ..operators.index_ledger import touch_liveness
 
@@ -659,15 +607,11 @@ def stream_jsonl_ingest(parsed: DataFrame, *, out_dir: str,
     under ``quarantine_dir/batch_id=<epoch>/`` — nothing is dropped,
     and the quarantine is greppable evidence for upstream bug reports.
 
-    Exactly-once via the same epoch-directory ledger as
-    ``stream_export_shards``: foreachBatch is at-least-once, so each
-    epoch OVERWRITES its own ``batch_id`` partition on replay. Two
-    sinks from one micro-batch is exactly the case the native file
+    Exactly-once like ``stream_export_shards`` (overwrite on replay).
+    Two sinks from one micro-batch is exactly the case the native file
     sink can't express (one sink per query) — foreachBatch is the
     documented escape hatch.
     """
-    import os
-
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
@@ -683,11 +627,29 @@ def stream_jsonl_ingest(parsed: DataFrame, *, out_dir: str,
             bad.write.mode("overwrite").parquet(
                 os.path.join(quarantine_dir, f"batch_id={int(batch_id)}"))
 
-    w = (parsed.writeStream.foreachBatch(per_batch)
-         .option("checkpointLocation", checkpoint))
-    if trigger_once:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _foreach_batch(parsed, per_batch, checkpoint, trigger_once)
+
+
+def _stream_ledger(df: DataFrame, epoch, *, state_dir: str, checkpoint: str,
+                   trigger_once: bool, compact=None,
+                   compact_every: int | None = None):
+    """foreachBatch runner of an epoch ledger: ``epoch(batch_df,
+    batch_id)`` lands each micro-batch; with ``compact_every=N`` the
+    ledger self-compacts (``compact(spark)``) whenever N live epochs
+    accumulate. The stream is the ledger's single writer, so
+    compacting inside foreachBatch can't race, and a replayed
+    already-folded epoch is ignored as a ghost by the readers."""
+    if compact_every is not None and compact_every < 2:
+        raise ValueError(f"compact_every must be >= 2, got {compact_every}")
+
+    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
+        epoch(batch_df, batch_id)
+        spark = batch_df.sparkSession
+        if compact_every is not None and len(EpochLedger(
+                spark, state_dir).live_epochs()) >= compact_every:
+            compact(spark)
+
+    return _foreach_batch(df, per_batch, checkpoint, trigger_once)
 
 
 def stream_token_sketch(docs: DataFrame, *, sketch_dir: str,
@@ -702,35 +664,24 @@ def stream_token_sketch(docs: DataFrame, *, sketch_dir: str,
     sketch — :func:`read_token_sketch` — and incremental == one-shot
     exactly (merge law, tested), with no rescan of history ever.
 
-    Exactly-once via the same epoch-directory ledger as
-    ``stream_export_shards``: a batch's sketch is a pure function of
-    the batch's rows, so a replayed epoch overwrites its directory
-    with identical counters. Per-batch state is O(depth·width), the
-    landed lake is O(epochs · depth·width) tiny counter rows — at
-    100 TB this is the only way "how often does token x occur in the
-    whole corpus so far" stays answerable without a vocabulary-sized
-    shuffle per question.
+    Exactly-once by the :class:`EpochLedger` protocol. Per-batch state
+    is O(depth·width), the landed lake is O(epochs · depth·width) tiny
+    counter rows — at 100 TB this is the only way "how often does
+    token x occur in the whole corpus so far" stays answerable without
+    a vocabulary-sized shuffle per question.
     """
-    import os
-
-    from ..functions.text import tokens
-    from ..operators.sketches import CM_DEPTH, CM_WIDTH, cm_sketch
+    from ..operators.sketches import CM_DEPTH, CM_WIDTH
 
     d = CM_DEPTH if depth is None else depth
     w_ = CM_WIDTH if width is None else width
     if d < 1 or w_ < 1:
         raise ValueError(f"sketch geometry must be positive, got "
                          f"depth={d} width={w_}")
-
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        cm_epoch(batch_df, batch_id, sketch_dir=sketch_dir,
-                 text_col=text_col, depth=d, width=w_)
-
-    w = (docs.writeStream.foreachBatch(per_batch)
-         .option("checkpointLocation", checkpoint))
-    if trigger_once:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _stream_ledger(
+        docs, lambda b, e: cm_epoch(b, e, sketch_dir=sketch_dir,
+                                    text_col=text_col, depth=d, width=w_),
+        state_dir=sketch_dir, checkpoint=checkpoint,
+        trigger_once=trigger_once)
 
 
 def cm_epoch(batch_df: DataFrame, batch_id: int, *, sketch_dir: str,
@@ -739,146 +690,48 @@ def cm_epoch(batch_df: DataFrame, batch_id: int, *, sketch_dir: str,
     """One CM ledger epoch: the batch's token count-min sketch landed
     under ``sketch_dir/batch_id=<epoch>/`` — the shared body of
     stream_token_sketch's foreachBatch closure AND the q137 lifecycle
-    query (the drift_epoch / kmv_epoch pattern). A sketch is a pure
-    function of the batch's rows, so a replayed epoch overwrites its
-    directory with identical counters (exactly-once)."""
-    import os
-
+    query. Exactly-once: see :class:`EpochLedger`."""
     from ..functions.text import tokens
-    from ..operators.index_ledger import touch_liveness
     from ..operators.sketches import CM_DEPTH, CM_WIDTH, cm_sketch
 
-    if batch_df.isEmpty():
-        return
-    occ = batch_df.select(
-        F.explode(tokens(text_col)).alias("tok"))
-    sk = cm_sketch(occ, "tok",
-                   depth=CM_DEPTH if depth is None else depth,
-                   width=CM_WIDTH if width is None else width)
-    sk.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(sketch_dir, f"batch_id={int(batch_id)}"))
-    touch_liveness(sketch_dir)
+    EpochLedger(batch_df.sparkSession, sketch_dir).write(
+        batch_df, batch_id, lambda b: cm_sketch(
+            b.select(F.explode(tokens(text_col)).alias("tok")), "tok",
+            depth=CM_DEPTH if depth is None else depth,
+            width=CM_WIDTH if width is None else width))
 
 
 def _cm_epoch_fold(df: DataFrame) -> DataFrame:
-    """Cell-wise CM fold with the geometry check asserted GLOBALLY
-    (cm_merge's pattern): a per-(depth, cell)-group assertion misses
-    two epochs of different geometry whose populated cells never share
-    a group — sparse sketches with different widths would fold
-    silently into wrong counters. The 1-row aggregate sees every row;
-    its checked bit multiplies into the counters so pruning can never
-    elide it; the coalesce keeps an empty ledger a no-op."""
-    chk = df.agg(
-        F.when(
-            F.assert_true(
-                F.coalesce(F.min("geom") == F.max("geom"), F.lit(True)),
-                F.concat(F.lit("count-min geometry mismatch across "
-                               "epochs: "),
-                         F.concat_ws(" vs ", F.min("geom"),
-                                     F.max("geom")))).isNull(),
-            F.lit(1).cast("long")).alias("_geom_ok"))
-    return (df.crossJoin(F.broadcast(chk))
-            .groupBy("depth", "cell")
-            .agg((F.sum("cnt") * F.first("_geom_ok")).alias("cnt"),
-                 F.min("geom").alias("geom")))
+    """Cell-wise CM fold, geometry asserted GLOBALLY (cm_merge's
+    pattern, :func:`geometry_guard`); the coalesce keeps an empty
+    ledger a no-op."""
+    return (geometry_guard(
+        df, F.coalesce(F.min("geom") == F.max("geom"), F.lit(True)),
+        F.concat(F.lit("count-min geometry mismatch across epochs: "),
+                 F.concat_ws(" vs ", F.min("geom"), F.max("geom"))))
+        .groupBy("depth", "cell")
+        .agg((F.sum("cnt") * F.first("_geom_ok")).alias("cnt"),
+             F.min("geom").alias("geom")))
 
 
 def read_token_sketch(spark: SparkSession, sketch_dir: str) -> DataFrame:
     """Fold the LIVE landed epoch sketches into the global one:
     cell-wise addition over O(live epochs · depth·width) counter rows
     — bounded by sketch geometry, never by corpus or vocabulary size.
-    Live = the newest compacted baseline (if any) plus every epoch
-    newer than it (:func:`compact_epoch_ledger` bounds the epoch
-    count). Epochs landed with mismatched geometry fail the fold's
-    GLOBAL assertion (the geom stamp rides every counter row; the
-    check aggregates over all rows, not per output group, so disjoint
-    cell populations cannot dodge it). Feed the result to
+    Live = the newest compacted baseline plus every newer epoch
+    (:class:`EpochLedger`). Epochs landed with mismatched geometry
+    fail the fold's GLOBAL assertion. Feed the result to
     ``operators.sketches.cm_estimate``."""
-    return _cm_epoch_fold(spark.read.parquet(*_live_paths(sketch_dir)))
+    return _cm_epoch_fold(EpochLedger(spark, sketch_dir).read())
 
 
-# ---------------------------------------------------------------------------
-# Epoch-ledger log compaction: fold-on-read costs O(live epochs); at
-# one epoch per micro-batch that grows without bound, so periodically
-# fold old epochs into a compacted baseline (Kafka-style log
-# compaction, legal because every ledger state is a commutative
-# monoid — the same law that makes incremental == one-shot).
-#
-# Crash-safe protocol: the folded baseline is WRITTEN FIRST under
-# _compacted/upto=<N>/ (parquet's _SUCCESS commit marker makes the
-# write atomic-at-read); readers ignore epochs <= the newest committed
-# baseline, so deleting the superseded epoch dirs afterwards is pure
-# garbage collection — a crash between write and delete double-stores
-# but never double-COUNTS. A replayed epoch <= upto recreating its
-# directory is likewise ignored (its contribution is already in the
-# baseline).
-# ---------------------------------------------------------------------------
-
-def _epoch_ids(state_dir: str, *, committed_only: bool = True) -> list[int]:
-    import os
-    import re as _re
-    if not os.path.isdir(state_dir):
-        return []
-    out = []
-    for d in os.listdir(state_dir):
-        m = _re.fullmatch(r"batch_id=(\d+)", d)
-        if not m:
-            continue
-        # an epoch mid-write (crash before the parquet _SUCCESS
-        # commit) must not be read — and above all must never be
-        # FOLDED into a baseline: the full replay that recreates it
-        # would then be ignored as a ghost, a permanent undercount
-        if committed_only and not os.path.exists(
-                os.path.join(state_dir, d, "_SUCCESS")):
-            continue
-        out.append(int(m.group(1)))
-    return sorted(out)
-
-
-def _max_compact(state_dir: str):
-    import os
-    import re as _re
-    root = os.path.join(state_dir, "_compacted")
-    if not os.path.isdir(root):
-        return None
-    best = None
-    for d in os.listdir(root):
-        m = _re.fullmatch(r"upto=(\d+)", d)
-        # only COMMITTED baselines count (crash mid-write leaves no
-        # _SUCCESS and the reader keeps using the raw epochs)
-        if m and os.path.exists(os.path.join(root, d, "_SUCCESS")):
-            n = int(m.group(1))
-            best = n if best is None else max(best, n)
-    return best
-
-
+# the torn-ledger and self-compaction tests probe these two directly
 def _live_paths(state_dir: str) -> list[str]:
-    """The newest committed baseline (if any) + epochs newer than it.
-    Local-FS directory listing; on an object store / HDFS swap the
-    listdir calls for the FileSystem API — the protocol is unchanged."""
-    import os
-    c = _max_compact(state_dir)
-    paths = []
-    if c is not None:
-        paths.append(os.path.join(state_dir, "_compacted", f"upto={c}"))
-    floor = -1 if c is None else c
-    paths += [os.path.join(state_dir, f"batch_id={e}")
-              for e in _epoch_ids(state_dir) if e > floor]
-    if not paths:
-        # Nothing committed. If a torn epoch dir exists (crash during
-        # the very first epoch's write — no _SUCCESS anywhere), the
-        # old fallback of reading state_dir directly would fold the
-        # torn files, violating the committed-only contract the rest
-        # of the ledger enforces. Fail loudly instead; the stream's
-        # replay of that epoch will commit it.
-        if _epoch_ids(state_dir, committed_only=False):
-            raise ValueError(
-                f"ledger at {state_dir} contains only uncommitted "
-                "(torn, no _SUCCESS) epoch writes — refusing to read "
-                "partial state; replay the stream to commit the epoch")
-        # surface the same error a direct read of an empty dir would
-        paths = [state_dir]
-    return paths
+    return EpochLedger(SparkSession.active(), state_dir).live_paths()
+
+
+def _max_compact(state_dir: str) -> int | None:
+    return EpochLedger(SparkSession.active(), state_dir).baseline()
 
 
 def compact_epoch_ledger(spark: SparkSession, state_dir: str,
@@ -888,56 +741,11 @@ def compact_epoch_ledger(spark: SparkSession, state_dir: str,
     compacted baseline; returns the new baseline's ``upto`` epoch (or
     None when there is nothing to compact). ``fold`` maps the raw
     union of live state rows to the folded state (the same combine
-    the ledger's reader uses — pass ``read_matview``/
-    ``read_token_sketch`` style folds via the wrappers below).
-
-    With ``gc=True`` the superseded epoch directories and older
-    baselines are deleted after the new baseline commits; correctness
-    never depends on the deletes (readers already ignore them).
-    """
-    import os
-    import shutil
-
-    c = _max_compact(state_dir)
-    floor = -1 if c is None else c
-    live = [e for e in _epoch_ids(state_dir) if e > floor]
-    if len(live) <= keep_last or not live:
-        return None
-    upto = live[-1] if keep_last == 0 else live[-(keep_last + 1)]
-    # never compact PAST a partial (uncommitted) epoch: its eventual
-    # replay must stay a live epoch, not an ignored ghost. A
-    # sequential stream can't produce committed epochs above a
-    # crashed one, but the ledger shouldn't bet on single-writer.
-    partial = [e for e in _epoch_ids(state_dir, committed_only=False)
-               if e > floor and e not in set(live)]
-    if partial:
-        upto = min(upto, min(partial) - 1)
-    live = [e for e in live if e <= upto]
-    if not live:
-        return None
-    srcs = ([os.path.join(state_dir, "_compacted", f"upto={c}")]
-            if c is not None else [])
-    srcs += [os.path.join(state_dir, f"batch_id={e}")
-             for e in live if e <= upto]
-    dst = os.path.join(state_dir, "_compacted", f"upto={upto}")
-    fold(spark.read.parquet(*srcs)).write.mode("overwrite").parquet(dst)
-    if gc:
-        # sweep EVERYTHING superseded, not just this round's inputs:
-        # ghost epochs recreated by replays after an earlier
-        # compaction, epochs folded by previous baselines, stale
-        # uncommitted baselines — all invisible to readers, all pure
-        # garbage (committed_only=False: an uncommitted dir <= upto
-        # is a crashed write of an already-folded epoch)
-        for e in _epoch_ids(state_dir, committed_only=False):
-            if e <= upto:
-                shutil.rmtree(os.path.join(state_dir, f"batch_id={e}"),
-                              ignore_errors=True)
-        comp_root = os.path.join(state_dir, "_compacted")
-        for d in os.listdir(comp_root):
-            if d != f"upto={upto}":
-                shutil.rmtree(os.path.join(comp_root, d),
-                              ignore_errors=True)
-    return upto
+    the ledger's reader uses). With ``gc=True`` the superseded
+    directories are deleted after the new baseline commits; see
+    :meth:`EpochLedger.compact`."""
+    return EpochLedger(spark, state_dir).compact(fold, keep_last=keep_last,
+                                                 gc=gc)
 
 
 def _mv_geom(ks: list, value: str) -> str:
@@ -945,33 +753,23 @@ def _mv_geom(ks: list, value: str) -> str:
 
 
 def _matview_fold(df: DataFrame, ks: list) -> DataFrame:
-    """Matview monoid fold with the geometry stamp asserted GLOBALLY:
-    two epochs landed with different (keys, value) geometries have
-    IDENTICAL state schemas — (n, sum, sumsq, min, max) — and would
-    otherwise fold silently into nonsense (the kmv reader-k hazard,
-    one ledger over). One distinct geom across every folded row, and
-    it must carry the reader's keys; the checked bit multiplies into
-    ``n`` so pruning can never elide it. ``geom`` stays on the output
-    (compaction baselines must keep the stamp); read_matview drops
-    it."""
+    """Matview monoid fold. Epochs of different (keys, value) geometry
+    share one state schema, so the guard asserts one geom across every
+    folded row, carrying the reader's keys. ``geom`` stays on the
+    output for compaction baselines; read_matview drops it."""
     if "geom" not in df.columns:
         raise ValueError(
             "matview ledger predates the geometry stamp — rebuild it "
             "(epochs land the stamp since matview_epoch gained geom)")
     prefix = "|".join(ks) + "|"
-    chk = df.agg(
-        F.when(
-            F.assert_true(
-                F.coalesce(
-                    (F.count_distinct("geom") == 1)
-                    & (F.count(F.when(~F.col("geom").startswith(prefix),
-                                      F.lit(1))) == 0), F.lit(True)),
-                F.concat(
-                    F.lit("matview geometry mismatch: ledger holds "),
-                    F.concat_ws(",", F.collect_set("geom")),
-                    F.lit(f", read with keys {ks}")))
-            .isNull(), F.lit(1).cast("long")).alias("_geom_ok"))
-    return (df.crossJoin(F.broadcast(chk))
+    ok = F.coalesce(
+        (F.count_distinct("geom") == 1)
+        & (F.count(F.when(~F.col("geom").startswith(prefix),
+                          F.lit(1))) == 0), F.lit(True))
+    msg = F.concat(F.lit("matview geometry mismatch: ledger holds "),
+                   F.concat_ws(",", F.collect_set("geom")),
+                   F.lit(f", read with keys {ks}"))
+    return (geometry_guard(df, ok, msg)
             .groupBy(*ks)
             .agg((F.sum("n") * F.first("_geom_ok")).cast("long")
                  .alias("n"),
@@ -991,9 +789,6 @@ def compact_matview(spark: SparkSession, state_dir: str,
     """Log-compact a ``stream_matview`` ledger (matview monoid fold;
     geometry re-checked globally across the folded epochs and kept on
     the baseline rows)."""
-    from ..operators.index_ledger import touch_liveness
-
-    touch_liveness(state_dir)
     ks = [keys] if isinstance(keys, str) else list(keys)
     return compact_epoch_ledger(spark, state_dir,
                                 lambda df: _matview_fold(df, ks),
@@ -1005,106 +800,69 @@ def compact_token_sketch(spark: SparkSession, sketch_dir: str, *,
     """Log-compact a ``stream_token_sketch`` ledger (cell-wise CM sum;
     geometry re-checked GLOBALLY across the folded epochs — see
     :func:`_cm_epoch_fold`)."""
-    from ..operators.index_ledger import touch_liveness
-
-    touch_liveness(sketch_dir)
     return compact_epoch_ledger(spark, sketch_dir, _cm_epoch_fold,
                                 keep_last=keep_last, gc=gc)
 
 
-# ---------------------------------------------------------------------------
-# KMV distinct-count ledger — the DISTINCT-COUNT companion to the CM
-# frequency ledger above, closing the sketch tier's last streaming
-# gap (CM had stream_token_sketch; KMV had only the expression-level
-# kmv_merge_expr). Each micro-batch lands its own per-group KMV
-# sketches (operators/sketches.kmv_sketch_many in LONG form: one row
-# per (group, kind) with the array sketch); because the k smallest
-# distinct hashes of a union are among the union of each side's k
-# smallest, the fold-on-read is EXACT — the folded sketch is
-# bit-identical to a one-shot sketch of the whole history, so the
-# live view answers "distinct users so far" without ever rescanning
-# history (tested; driver-checked end-to-end by q136, whose oracle is
-# literally q115's one-shot SQL).
-#
-# Geometry: every row carries a ``geom`` stamp "k<k>/<salt>" — a
-# ledger mixing sketch sizes or salts would fold into NONSENSE (the
-# k-th order statistic of differently-salted hashes estimates
-# nothing), so the fold asserts one geom per kind GLOBALLY across all
-# folded rows (the _cm_epoch_fold discipline: a per-group check would
-# miss epochs whose populated groups never collide).
-# ---------------------------------------------------------------------------
+# KMV distinct-count ledger: per-(group, kind) sketches in LONG form
+# (operators/sketches.kmv_sketch_many), each row stamped "k<k>/<salt>".
 
 def kmv_epoch(batch_df: DataFrame, batch_id: int, *, state_dir: str,
               keys: "dict[str, str]", group_cols=(), k: int | None = None,
               salts: "dict[str, str] | None" = None) -> None:
     """One KMV ledger epoch: the batch's per-(group, kind) sketches
-    landed under ``state_dir/batch_id=<epoch>/``. Module-level (the
-    drift_epoch / kmeans_epoch pattern) so the q136 lifecycle query
-    drives byte-identical logic to the stream's foreachBatch body.
-    A sketch is a pure function of the batch's rows, so a replayed
-    epoch overwrites its directory with identical rows (exactly-once,
-    epoch-directory ledger)."""
-    import os
-
-    from ..operators.index_ledger import touch_liveness
+    landed under ``state_dir/batch_id=<epoch>/``. Module-level so the
+    q136 lifecycle query drives byte-identical logic to the stream's
+    foreachBatch body. Exactly-once: see :class:`EpochLedger`."""
     from ..operators.sketches import KMV_K, kmv_sketch_many
 
-    if batch_df.isEmpty():
-        return
     kk = KMV_K if k is None else k
     salts = salts or {}
-    wide = kmv_sketch_many(batch_df, keys, group_cols=list(group_cols),
-                           k=kk, salts=salts)
     names = list(keys)
     stack_args = ", ".join(f"'{n}', {n}" for n in names)
     geom = F.create_map(*[
         x for n in names
         for x in (F.lit(n),
                   F.lit(f"k{kk}/{salts.get(n, f'kmv-{n}')}"))])
-    long = (wide.select(
-        *group_cols,
-        F.expr(f"stack({len(names)}, {stack_args}) AS (kind, sketch)"))
-        .withColumn("geom", F.element_at(geom, F.col("kind"))))
-    long.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"batch_id={int(batch_id)}"))
-    touch_liveness(state_dir)
+
+    def fold(b: DataFrame) -> DataFrame:
+        wide = kmv_sketch_many(b, keys, group_cols=list(group_cols),
+                               k=kk, salts=salts)
+        return (wide.select(
+            *group_cols,
+            F.expr(f"stack({len(names)}, {stack_args}) AS (kind, sketch)"))
+            .withColumn("geom", F.element_at(geom, F.col("kind"))))
+
+    EpochLedger(batch_df.sparkSession, state_dir).write(
+        batch_df, batch_id, fold)
 
 
 def _kmv_epoch_fold(df: DataFrame, group_cols, *,
                     k: int | None = None) -> DataFrame:
     """Merge per-epoch KMV sketches: per (group, kind), the k smallest
     of the union of the epochs' hash sets — exact by the KMV merge
-    law. Geometry is asserted GLOBALLY: one distinct geom per kind
-    across every folded row (sparse ledgers whose groups never share
-    an output row would dodge a per-group check). The checked bit
-    gates the output arrays so pruning can never elide it; empty
-    sketches (all-NULL key groups) survive as empty arrays."""
+    law. The checked bit gates the output arrays; empty sketches
+    (all-NULL key groups) survive as empty arrays."""
     from ..operators.sketches import KMV_K
 
     kk = KMV_K if k is None else k
     groups = list(group_cols)
-    # two global assertions ride one 1-row aggregate: (a) one geom
-    # per kind across every folded row; (b) every geom carries the
-    # READER's k — a k=8 ledger folded with k=64 would otherwise
-    # slice harmlessly but then take kmv_estimate_expr's
-    # "size < k ⇒ exact" branch and report a sketch SIZE as an exact
-    # count (silent, catastrophic); fail loudly instead.
-    chk = df.agg(
-        F.when(
-            F.assert_true(
-                F.coalesce(
-                    (F.count_distinct(F.struct("kind", "geom"))
-                     == F.count_distinct(F.col("kind")))
-                    & (F.count(F.when(
-                        ~F.col("geom").startswith(f"k{kk}/"),
-                        F.lit(1))) == 0), F.lit(True)),
-                F.lit("kmv geometry mismatch: a kind was landed with "
-                      f"more than one k/salt, or not with k={kk} "
-                      "(the reader's k must match the ledger's)"))
-            .isNull(), F.lit(1).cast("long")).alias("_geom_ok"))
+    # two global assertions: (a) one geom per kind across every folded
+    # row; (b) every geom carries the READER's k — a k=8 ledger folded
+    # with k=64 would otherwise slice harmlessly but then take
+    # kmv_estimate_expr's "size < k ⇒ exact" branch and report a
+    # sketch SIZE as an exact count (silent, catastrophic)
+    ok = F.coalesce(
+        (F.count_distinct(F.struct("kind", "geom"))
+         == F.count_distinct(F.col("kind")))
+        & (F.count(F.when(~F.col("geom").startswith(f"k{kk}/"),
+                          F.lit(1))) == 0), F.lit(True))
+    msg = F.lit("kmv geometry mismatch: a kind was landed with more "
+                f"than one k/salt, or not with k={kk} (the reader's k "
+                "must match the ledger's)")
     merged = F.slice(
         F.array_sort(F.array_distinct(F.collect_list("_h"))), 1, kk)
-    return (df.crossJoin(F.broadcast(chk))
+    return (geometry_guard(df, ok, msg)
             .select(*groups, "kind", "geom", "_geom_ok",
                     F.explode_outer("sketch").alias("_h"))
             .groupBy(*groups, "kind")
@@ -1118,8 +876,8 @@ def read_kmv_sketch(spark: SparkSession, state_dir: str, group_cols, *,
     ``kmv_sketch_many`` over the whole landed history (KMV merge is
     exact). O(live epochs · groups · kinds · k) longs ever move; feed
     the result's ``sketch`` column to ``kmv_estimate_expr``."""
-    return _kmv_epoch_fold(
-        spark.read.parquet(*_live_paths(state_dir)), group_cols, k=k)
+    return _kmv_epoch_fold(EpochLedger(spark, state_dir).read(),
+                           group_cols, k=k)
 
 
 def compact_kmv_sketch(spark: SparkSession, state_dir: str, group_cols, *,
@@ -1128,12 +886,8 @@ def compact_kmv_sketch(spark: SparkSession, state_dir: str, group_cols, *,
     """Log-compact a KMV ledger (per-(group, kind) k-smallest merge —
     legal because the fold is an exact idempotent monoid; geometry
     re-checked globally across the folded epochs)."""
-    from ..operators.index_ledger import touch_liveness
-
-    touch_liveness(state_dir)
     return compact_epoch_ledger(
-        spark, state_dir,
-        lambda df: _kmv_epoch_fold(df, group_cols, k=k),
+        spark, state_dir, lambda df: _kmv_epoch_fold(df, group_cols, k=k),
         keep_last=keep_last, gc=gc)
 
 
@@ -1151,29 +905,14 @@ def stream_kmv_sketch(events: DataFrame, *, state_dir: str,
     State at 100 TB: per-epoch cost is the batch-bounded sketch build
     (dedup shuffle + bucketed rank over the BATCH, never history);
     the landed lake is O(live epochs · groups · kinds · k) longs and
-    self-compacts with ``compact_every=N`` (single writer, so
-    compacting inside foreachBatch can't race; replayed already-
-    folded epochs are ignored as ghosts by the readers)."""
-    if compact_every is not None and compact_every < 2:
-        raise ValueError(f"compact_every must be >= 2, got {compact_every}")
+    self-compacts with ``compact_every=N``."""
     groups = list(group_cols)
-
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        kmv_epoch(batch_df, batch_id, state_dir=state_dir, keys=keys,
-                  group_cols=groups, k=k, salts=salts)
-        if compact_every is not None:
-            c = _max_compact(state_dir)
-            floor = -1 if c is None else c
-            live = [e for e in _epoch_ids(state_dir) if e > floor]
-            if len(live) >= compact_every:
-                compact_kmv_sketch(batch_df.sparkSession, state_dir,
-                                   groups, k=k)
-
-    w = (events.writeStream.foreachBatch(per_batch)
-         .option("checkpointLocation", checkpoint))
-    if trigger_once:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _stream_ledger(
+        events, lambda b, e: kmv_epoch(b, e, state_dir=state_dir, keys=keys,
+                                       group_cols=groups, k=k, salts=salts),
+        state_dir=state_dir, checkpoint=checkpoint,
+        trigger_once=trigger_once, compact_every=compact_every,
+        compact=lambda s: compact_kmv_sketch(s, state_dir, groups, k=k))
 
 
 def stream_matview(events: DataFrame, *, state_dir: str, checkpoint: str,
@@ -1188,40 +927,18 @@ def stream_matview(events: DataFrame, *, state_dir: str, checkpoint: str,
     fold-order drift), so the view answers "group totals over the
     whole history" without ever rescanning history.
 
-    Exactly-once via the epoch-directory ledger (same contract as
-    ``stream_export_shards``/``stream_token_sketch``): a batch's state
-    is a pure function of its rows, so a replayed epoch overwrites its
-    directory with an identical partition. Per-epoch cost is one hash
-    aggregate over the batch; the landed lake is O(live epochs ·
-    |groups|) state rows — with ``compact_every=N`` the ledger
-    self-compacts whenever N live epochs accumulate (the single
-    stream is the only writer, so compacting inside foreachBatch
-    can't race; a replayed already-folded epoch is ignored as a ghost
-    by the readers, so the fold stays exact across restarts).
+    Exactly-once by the :class:`EpochLedger` protocol. Per-epoch cost
+    is one hash aggregate over the batch; the landed lake is O(live
+    epochs · |groups|) state rows — with ``compact_every=N`` the
+    ledger self-compacts whenever N live epochs accumulate.
     """
-    import os
-
-    from ..operators.matview import aggregate_state
-
     ks = [keys] if isinstance(keys, str) else list(keys)
-    if compact_every is not None and compact_every < 2:
-        raise ValueError(f"compact_every must be >= 2, got {compact_every}")
-
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        matview_epoch(batch_df, batch_id, state_dir=state_dir,
-                      keys=ks, value=value)
-        if compact_every is not None:
-            c = _max_compact(state_dir)
-            floor = -1 if c is None else c
-            live = [e for e in _epoch_ids(state_dir) if e > floor]
-            if len(live) >= compact_every:
-                compact_matview(batch_df.sparkSession, state_dir, ks)
-
-    w = (events.writeStream.foreachBatch(per_batch)
-         .option("checkpointLocation", checkpoint))
-    if trigger_once:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _stream_ledger(
+        events, lambda b, e: matview_epoch(b, e, state_dir=state_dir,
+                                           keys=ks, value=value),
+        state_dir=state_dir, checkpoint=checkpoint,
+        trigger_once=trigger_once, compact_every=compact_every,
+        compact=lambda s: compact_matview(s, state_dir, ks))
 
 
 def read_matview(spark: SparkSession, state_dir: str,
@@ -1232,8 +949,8 @@ def read_matview(spark: SparkSession, state_dir: str,
     live count). Feed the result to ``matview.finalize_state`` for
     derived measures (avg); the fold output stays re-mergeable."""
     ks = [keys] if isinstance(keys, str) else list(keys)
-    return _matview_fold(
-        spark.read.parquet(*_live_paths(state_dir)), ks).drop("geom")
+    return _matview_fold(EpochLedger(spark, state_dir).read(),
+                         ks).drop("geom")
 
 
 def matview_epoch(batch_df: DataFrame, batch_id: int, *, state_dir: str,
@@ -1242,22 +959,15 @@ def matview_epoch(batch_df: DataFrame, batch_id: int, *, state_dir: str,
     (operators/matview.aggregate_state) landed under
     ``state_dir/batch_id=<epoch>/`` — the shared body of
     stream_matview's foreachBatch closure AND the q138 lifecycle
-    query (the drift_epoch / kmv_epoch / cm_epoch pattern). The state
-    is a pure function of the batch's rows, so a replayed epoch
-    overwrites its directory with identical rows (exactly-once)."""
-    import os
-
-    from ..operators.index_ledger import touch_liveness
+    query. Exactly-once: see :class:`EpochLedger`."""
     from ..operators.matview import aggregate_state
 
-    if batch_df.isEmpty():
-        return
     ks = [keys] if isinstance(keys, str) else list(keys)
-    st = aggregate_state(batch_df, ks, value).withColumn(
-        "geom", F.lit(_mv_geom(ks, value)))
-    st.write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"batch_id={int(batch_id)}"))
-    touch_liveness(state_dir)
+    EpochLedger(batch_df.sparkSession, state_dir).write(
+        batch_df, batch_id,
+        lambda b: aggregate_state(b, ks, value).withColumn(
+            "geom", F.lit(_mv_geom(ks, value))),
+        one_file=False)
 
 
 def kmeans_epoch(batch_df: DataFrame, batch_id: int, *, state_dir: str,
@@ -1265,31 +975,21 @@ def kmeans_epoch(batch_df: DataFrame, batch_id: int, *, state_dir: str,
                  vec_col: str = "embedding") -> None:
     """One streaming k-means epoch: sufficient statistics of the batch
     against the PINNED centroid generation, landed under
-    ``state_dir/batch_id=<epoch>/`` (epoch-directory ledger). Exposed
-    at module level (curation_funnel_epoch's pattern) so lifecycle
-    registry queries can drive epochs directly with the exact
-    foreachBatch body the stream runs.
+    ``state_dir/batch_id=<epoch>/``. Exposed at module level so
+    lifecycle registry queries can drive epochs directly with the
+    exact foreachBatch body the stream runs.
 
     The stats are a pure function of (batch rows, pinned centroids) —
-    operators/similarity.kmeans_epoch_stats — so a replayed epoch
-    overwrites its directory with identical rows (exactly-once), and
-    the generation stamp riding every row lets the fold reject a
-    restart that resumed with the wrong centroids."""
-    import os
-
-    from ..operators.index_ledger import touch_liveness
+    operators/similarity.kmeans_epoch_stats — so the epoch is
+    exactly-once (:class:`EpochLedger`), and the generation stamp
+    riding every row lets the fold reject a restart that resumed with
+    the wrong centroids."""
     from ..operators.similarity import kmeans_epoch_stats
 
-    if batch_df.isEmpty():
-        return
-    st = kmeans_epoch_stats(batch_df, centroids, id_col=id_col,
-                            vec_col=vec_col)
-    st.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"batch_id={int(batch_id)}"))
-    # the epochs land two levels under a pid-scoped scratch root when
-    # driven from q130 — keep the root's GC-liveness mtime tracking
-    # actual ledger activity (touch_liveness walks up to *_pid<N>)
-    touch_liveness(state_dir)
+    EpochLedger(batch_df.sparkSession, state_dir).write(
+        batch_df, batch_id,
+        lambda b: kmeans_epoch_stats(b, centroids, id_col=id_col,
+                                     vec_col=vec_col))
 
 
 def stream_kmeans(vecs: DataFrame, *, state_dir: str, checkpoint: str,
@@ -1297,8 +997,8 @@ def stream_kmeans(vecs: DataFrame, *, state_dir: str, checkpoint: str,
                   vec_col: str = "embedding", trigger_once: bool = True,
                   compact_every: int | None = None):
     """Mini-batch spherical k-means AT INGEST TIME — the streaming
-    twin of ``operators/similarity.lloyd_kmeans`` (VERDICT r6 ask #2),
-    under the same epoch-directory ledger as ``stream_matview``.
+    twin of ``operators/similarity.lloyd_kmeans``, under the same
+    epoch-directory ledger as ``stream_matview``.
 
     Each micro-batch lands the exact decimal sufficient statistics of
     its vectors against a PINNED centroid generation
@@ -1318,29 +1018,17 @@ def stream_kmeans(vecs: DataFrame, *, state_dir: str, checkpoint: str,
     literal assignment, no join/shuffle) + one (cell, pos)-keyed
     aggregate with map-side combine; landed state is O(live epochs ·
     k·dim) tiny rows — with ``compact_every=N`` the ledger
-    self-compacts (single writer, so compacting inside foreachBatch
-    can't race)."""
-    if compact_every is not None and compact_every < 2:
-        raise ValueError(f"compact_every must be >= 2, got {compact_every}")
+    self-compacts."""
     if not centroids:
         raise ValueError("stream_kmeans needs a non-empty centroid "
                          "generation (kmeans_seed_centroids)")
-
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        kmeans_epoch(batch_df, batch_id, state_dir=state_dir,
-                     centroids=centroids, id_col=id_col, vec_col=vec_col)
-        if compact_every is not None:
-            c = _max_compact(state_dir)
-            floor = -1 if c is None else c
-            live = [e for e in _epoch_ids(state_dir) if e > floor]
-            if len(live) >= compact_every:
-                compact_kmeans(batch_df.sparkSession, state_dir)
-
-    w = (vecs.writeStream.foreachBatch(per_batch)
-         .option("checkpointLocation", checkpoint))
-    if trigger_once:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _stream_ledger(
+        vecs, lambda b, e: kmeans_epoch(b, e, state_dir=state_dir,
+                                        centroids=centroids, id_col=id_col,
+                                        vec_col=vec_col),
+        state_dir=state_dir, checkpoint=checkpoint,
+        trigger_once=trigger_once, compact_every=compact_every,
+        compact=lambda s: compact_kmeans(s, state_dir))
 
 
 def read_kmeans_stats(spark: SparkSession, state_dir: str,
@@ -1351,11 +1039,11 @@ def read_kmeans_stats(spark: SparkSession, state_dir: str,
     centroid generation the ledger was built against as ``expect``
     whenever the caller knows it: min==max alone accepts a stale but
     internally-consistent ledger, which the refine path always
-    rejected but a bare final-generation fold did not (ADVICE r7)."""
+    rejected but a bare final-generation fold did not."""
     from ..operators.similarity import _kmeans_sig, kmeans_fold_stats
 
     return kmeans_fold_stats(
-        spark.read.parquet(*_live_paths(state_dir)),
+        EpochLedger(spark, state_dir).read(),
         expect_sig=None if expect is None else _kmeans_sig(expect))
 
 
@@ -1381,10 +1069,8 @@ def compact_kmeans(spark: SparkSession, state_dir: str, *,
     """Log-compact a ``stream_kmeans`` ledger (the (cell, pos) decimal
     fold — legal because the stats are a commutative monoid; the
     generation stamp survives the fold and stays asserted)."""
-    from ..operators.index_ledger import touch_liveness
     from ..operators.similarity import kmeans_fold_stats
 
-    touch_liveness(state_dir)
     return compact_epoch_ledger(spark, state_dir, kmeans_fold_stats,
                                 keep_last=keep_last, gc=gc)
 
@@ -1395,41 +1081,34 @@ def stream_expectations(events: DataFrame, checks, *, report_dir: str,
     compiled expectations suite (operators/expectations.
     run_expectations — one conditional-aggregate pass per batch plus
     one scan per FK rule) and lands the |rules|-row violations report
-    under ``report_dir/batch_id=<epoch>/``. The report is a pure
-    function of the batch's rows, so a replayed epoch overwrites its
-    directory with an identical report (epoch-directory ledger, same
-    contract as the sketch/matview/shard exports). Downstream a
-    gate-keeper reads the per-epoch reports and quarantines or admits
-    the corresponding data epochs — the violation history itself is
-    the audit trail.
+    under ``report_dir/batch_id=<epoch>/`` (exactly-once by the
+    :class:`EpochLedger` protocol). Downstream a gate-keeper reads the
+    per-epoch reports and quarantines or admits the corresponding data
+    epochs — the violation history itself is the audit trail.
 
     ``checks`` must be batch-evaluable: row-level / uniqueness /
     FK-vs-static-dim rules. Uniqueness is per-epoch (cross-epoch
     uniqueness is a maintained-state problem — pair with
     ``stream_matview`` keyed on the tuple if needed).
     """
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        expectations_epoch(batch_df, batch_id, report_dir=report_dir,
-                           checks=checks)
-
-    w = (events.writeStream.foreachBatch(per_batch)
-         .option("checkpointLocation", checkpoint))
-    if trigger_once:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _stream_ledger(
+        events, lambda b, e: expectations_epoch(b, e, report_dir=report_dir,
+                                                checks=checks),
+        state_dir=report_dir, checkpoint=checkpoint,
+        trigger_once=trigger_once)
 
 
 def _exp_geom(checks) -> str:
     """Deterministic fingerprint of an expectations CHECKS LIST — the
-    ledger-geometry stamp, rules edition (round-9, the r8 verdict's
-    CM_DEPTH/CM_WIDTH-style audit): two epochs landed under different
-    suites (a rule added mid-stream, a threshold retuned under the
-    same name) have IDENTICAL report schemas, so their folded sums
-    would silently mix incomparable counts. The fingerprint covers
-    each rule's name, kind, columns, AND predicate expression text —
-    renaming nothing but a threshold still changes it. (The FK dim's
-    CONTENTS are deliberately out of scope: a dim is a relation, not
-    geometry; its drift is a data question the suite itself checks.)
+    ledger-geometry stamp, rules edition: two epochs landed under
+    different suites (a rule added mid-stream, a threshold retuned
+    under the same name) have IDENTICAL report schemas, so their
+    folded sums would silently mix incomparable counts. The
+    fingerprint covers each rule's name, kind, columns, AND predicate
+    expression text — renaming nothing but a threshold still changes
+    it. (The FK dim's CONTENTS are deliberately out of scope: a dim is
+    a relation, not geometry; its drift is a data question the suite
+    itself checks.)
     """
     import hashlib
 
@@ -1443,27 +1122,20 @@ def _exp_geom(checks) -> str:
 def expectations_epoch(batch_df: DataFrame, batch_id: int, *,
                        report_dir: str, checks) -> None:
     """One expectations ledger epoch: the batch's |rules|-row report,
-    epoch-stamped in the rows (the drift_epoch convention — explicit
-    leaf-dir reads lose the partition column, so the fold needs the
-    stamp inside) and geometry-stamped with the checks-list
-    fingerprint (:func:`_exp_geom`), landed under
-    ``report_dir/batch_id=<epoch>/`` — the shared body of
-    stream_expectations' foreachBatch closure AND the q139 lifecycle
-    query. The report is a pure function of the batch's rows
-    (exactly-once by overwrite)."""
-    import os
-
+    epoch-stamped in the rows (explicit leaf-dir reads lose the
+    partition column, so the fold needs the stamp inside) and
+    geometry-stamped with the checks-list fingerprint
+    (:func:`_exp_geom`), landed under ``report_dir/batch_id=<epoch>/``
+    — the shared body of stream_expectations' foreachBatch closure
+    AND the q139 lifecycle query. Exactly-once: see
+    :class:`EpochLedger`."""
     from ..operators.expectations import run_expectations
-    from ..operators.index_ledger import touch_liveness
 
-    if batch_df.isEmpty():
-        return
-    rep = (run_expectations(batch_df, checks)
-           .withColumn("epoch", F.lit(int(batch_id)).cast("int"))
-           .withColumn("geom", F.lit(_exp_geom(checks))))
-    rep.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(report_dir, f"batch_id={int(batch_id)}"))
-    touch_liveness(report_dir)
+    EpochLedger(batch_df.sparkSession, report_dir).write(
+        batch_df, batch_id,
+        lambda b: run_expectations(b, checks)
+        .withColumn("epoch", F.lit(int(batch_id)).cast("int"))
+        .withColumn("geom", F.lit(_exp_geom(checks))))
 
 
 def _expectations_fold(df: DataFrame, *,
@@ -1471,18 +1143,14 @@ def _expectations_fold(df: DataFrame, *,
     """Per-(epoch, check) fold — epochs stay APART (the audit-trail
     contract, like the drift ledger); each pair appears once per live
     source so the sum is an identity that also makes baseline∪epoch
-    unions uniform. Geometry is asserted GLOBALLY (the matview/kmv
-    discipline): one distinct checks-list fingerprint across every
-    folded row — and equal to the READER's suite when
-    ``expected_geom`` is given — so epochs landed under different
-    rule suites can never sum into one audit trail. The checked bit
-    multiplies into the counts so pruning cannot elide it; ``geom``
-    stays on the output so a compacted baseline re-folds under the
-    same guard."""
+    unions uniform. Geometry: one checks-list fingerprint across every
+    folded row, equal to the READER's suite when ``expected_geom`` is
+    given. ``geom`` stays on the output so a compacted baseline
+    re-folds under the same guard."""
     if "epoch" not in df.columns:
         # reports landed before the in-row epoch stamp have no epoch
         # column; fail with the rebuild message, not an opaque
-        # UNRESOLVED_COLUMN (the matview/drift legacy-guard rule)
+        # UNRESOLVED_COLUMN
         raise ValueError(
             "expectations ledger predates the in-row epoch stamp — "
             "rebuild it (epochs carry the stamp since "
@@ -1498,18 +1166,11 @@ def _expectations_fold(df: DataFrame, *,
                                   F.lit(1))) == 0)
     want = ("" if expected_geom is None
             else f"; reader expects {expected_geom}")
-    chk = df.agg(
-        F.when(
-            F.assert_true(
-                # an empty ledger slice folds to nothing — vacuously ok
-                (F.count(F.lit(1)) == 0) | ok,
-                F.concat(
-                    F.lit("expectations geometry mismatch: ledger "
-                          "holds "),
-                    F.concat_ws(",", F.sort_array(F.collect_set("geom"))),
-                    F.lit(want))).isNull(),
-            F.lit(1).cast("long")).alias("_geom_ok"))
-    return (df.crossJoin(F.broadcast(chk))
+    msg = F.concat(F.lit("expectations geometry mismatch: ledger holds "),
+                   F.concat_ws(",", F.sort_array(F.collect_set("geom"))),
+                   F.lit(want))
+    # an empty ledger slice folds to nothing — vacuously ok
+    return (geometry_guard(df, (F.count(F.lit(1)) == 0) | ok, msg)
             .groupBy("epoch", "check")
             .agg((F.sum("violations") * F.first("_geom_ok"))
                  .cast("long").alias("violations"),
@@ -1534,9 +1195,8 @@ def read_expectations(spark: SparkSession, report_dir: str, *,
     suite being asked about (the kmv reader's-k rule) — without it
     only internal cross-epoch consistency is asserted."""
     expected = None if checks is None else _exp_geom(checks)
-    live = _expectations_fold(
-        spark.read.parquet(*_live_paths(report_dir)),
-        expected_geom=expected)
+    live = _expectations_fold(EpochLedger(spark, report_dir).read(),
+                              expected_geom=expected)
     if not folded:
         return live
     return (live.groupBy("check")
@@ -1551,9 +1211,6 @@ def compact_expectations(spark: SparkSession, report_dir: str, *,
                          keep_last: int = 0, gc: bool = True) -> int | None:
     """Log-compact a ``stream_expectations`` ledger (per-(epoch,
     check) fold — epochs survive compaction separately)."""
-    from ..operators.index_ledger import touch_liveness
-
-    touch_liveness(report_dir)
     return compact_epoch_ledger(spark, report_dir, _expectations_fold,
                                 keep_last=keep_last, gc=gc)
 
@@ -1564,31 +1221,21 @@ def drift_epoch(batch_df: DataFrame, batch_id: int, *, state_dir: str,
     """One streaming drift epoch: the batch's fixed-bin histogram
     (operators/expectations.histogram_counts) stamped with its epoch
     id, landed under ``state_dir/batch_id=<epoch>/``. Exposed at
-    module level (the kmeans_epoch / curation_funnel_epoch pattern)
-    so the q133 lifecycle query drives byte-identical logic to the
-    stream's foreachBatch body.
+    module level so the q133 lifecycle query drives byte-identical
+    logic to the stream's foreachBatch body. Exactly-once: see
+    :class:`EpochLedger`.
 
-    The histogram is a pure function of the batch's rows, so a
-    replayed epoch overwrites its directory with identical rows
-    (exactly-once, epoch-directory ledger). The epoch id rides INSIDE
-    the rows — unlike the matview/sketch ledgers the drift monitor
-    needs epochs kept APART (drift is per-epoch vs a baseline epoch),
-    so compaction folds by (epoch, bin), never across epochs."""
-    import os
-
+    The epoch id rides INSIDE the rows — unlike the matview/sketch
+    ledgers the drift monitor needs epochs kept APART (drift is
+    per-epoch vs a baseline epoch), so compaction folds by (epoch,
+    bin), never across epochs."""
     from ..operators.expectations import histogram_counts
-    from ..operators.index_ledger import touch_liveness
 
-    if batch_df.isEmpty():
-        return
-    hist = (histogram_counts(batch_df, value, n_bins=n_bins, lo=lo,
-                             hi=hi)
-            .withColumn("epoch", F.lit(int(batch_id)).cast("int"))
-            .withColumn("geom",
-                        F.lit(f"{n_bins}/{lo!r}/{hi!r}/{value}")))
-    hist.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"batch_id={int(batch_id)}"))
-    touch_liveness(state_dir)
+    EpochLedger(batch_df.sparkSession, state_dir).write(
+        batch_df, batch_id,
+        lambda b: histogram_counts(b, value, n_bins=n_bins, lo=lo, hi=hi)
+        .withColumn("epoch", F.lit(int(batch_id)).cast("int"))
+        .withColumn("geom", F.lit(f"{n_bins}/{lo!r}/{hi!r}/{value}")))
 
 
 def stream_drift(docs: DataFrame, *, state_dir: str, checkpoint: str,
@@ -1596,12 +1243,11 @@ def stream_drift(docs: DataFrame, *, state_dir: str, checkpoint: str,
                  hi: float = 1.0, trigger_once: bool = True,
                  compact_every: int | None = None):
     """Distribution-drift monitoring AT INGEST TIME — the streaming
-    twin of the q132 batch monitor (VERDICT r7 ask #6; every other
-    quality tier already had its ingest-time twin): each micro-batch
-    lands its own quality histogram (``drift_epoch``);
-    :func:`read_drift` folds the live epochs and computes the exact
-    integer total-variation statistic of every epoch against a
-    baseline epoch (operators/expectations.tv_drift).
+    twin of the q132 batch monitor: each micro-batch lands its own
+    quality histogram (``drift_epoch``); :func:`read_drift` folds the
+    live epochs and computes the exact integer total-variation
+    statistic of every epoch against a baseline epoch
+    (operators/expectations.tv_drift).
 
     Because per-(epoch, bin) counts are a commutative monoid, the
     folded relation is BIT-IDENTICAL to the one-shot
@@ -1612,26 +1258,14 @@ def stream_drift(docs: DataFrame, *, state_dir: str, checkpoint: str,
     State at 100 TB: per-epoch cost is one hash aggregate with
     map-side combine (the batch never shuffles, only n_bins count
     rows land); the ledger holds O(live epochs · n_bins) tiny rows
-    and self-compacts with ``compact_every=N`` (single writer, so
-    compacting inside foreachBatch can't race)."""
-    if compact_every is not None and compact_every < 2:
-        raise ValueError(f"compact_every must be >= 2, got {compact_every}")
-
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        drift_epoch(batch_df, batch_id, state_dir=state_dir, value=value,
-                    n_bins=n_bins, lo=lo, hi=hi)
-        if compact_every is not None:
-            c = _max_compact(state_dir)
-            floor = -1 if c is None else c
-            live = [e for e in _epoch_ids(state_dir) if e > floor]
-            if len(live) >= compact_every:
-                compact_drift(batch_df.sparkSession, state_dir)
-
-    w = (docs.writeStream.foreachBatch(per_batch)
-         .option("checkpointLocation", checkpoint))
-    if trigger_once:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    and self-compacts with ``compact_every=N``."""
+    return _stream_ledger(
+        docs, lambda b, e: drift_epoch(b, e, state_dir=state_dir,
+                                       value=value, n_bins=n_bins, lo=lo,
+                                       hi=hi),
+        state_dir=state_dir, checkpoint=checkpoint,
+        trigger_once=trigger_once, compact_every=compact_every,
+        compact=lambda s: compact_drift(s, state_dir))
 
 
 def _drift_fold(df: DataFrame) -> DataFrame:
@@ -1639,39 +1273,28 @@ def _drift_fold(df: DataFrame) -> DataFrame:
     combine. Grouping BY epoch is what keeps compaction legal for
     this monitor: epochs must stay apart (each is compared to the
     baseline), so the baseline directory holds every epoch's
-    histogram rows, merely de-fragmented.
-
-    The geometry stamp (bins/lo/hi/value) is asserted GLOBALLY:
-    epochs binned under different edges share the same (epoch, bin,
-    n) schema and the cross-epoch TV comparison of mixed geometries
-    is nonsense — fail loudly instead (the matview/kmv hazard, one
-    ledger over). The stamp survives on the output so compaction
-    baselines keep it; read_drift_hist drops it."""
+    histogram rows, merely de-fragmented. Epochs binned under
+    different edges (the bins/lo/hi/value stamp) fail the geometry
+    guard; the stamp survives on the output for compaction baselines
+    and read_drift_hist drops it."""
     if "geom" not in df.columns:
         raise ValueError(
             "drift ledger predates the geometry stamp — rebuild it "
             "(epochs land the stamp since drift_epoch gained geom)")
-    chk = df.agg(
-        F.when(
-            F.assert_true(
-                F.coalesce(F.count_distinct("geom") == 1, F.lit(True)),
-                F.concat(
-                    F.lit("drift geometry mismatch across epochs: "),
-                    F.concat_ws(",", F.collect_set("geom"))))
-            .isNull(), F.lit(1).cast("long")).alias("_geom_ok"))
-    return (df.crossJoin(F.broadcast(chk))
-            .groupBy("epoch", "bin")
-            .agg((F.sum("n") * F.first("_geom_ok")).cast("long")
-                 .alias("n"),
-                 F.min("geom").alias("geom")))
+    return (geometry_guard(
+        df, F.coalesce(F.count_distinct("geom") == 1, F.lit(True)),
+        F.concat(F.lit("drift geometry mismatch across epochs: "),
+                 F.concat_ws(",", F.collect_set("geom"))))
+        .groupBy("epoch", "bin")
+        .agg((F.sum("n") * F.first("_geom_ok")).cast("long").alias("n"),
+             F.min("geom").alias("geom")))
 
 
 def read_drift_hist(spark: SparkSession, state_dir: str) -> DataFrame:
     """The live per-epoch histograms — identical to the one-shot
     ``histogram_counts(union, keys=("epoch",))`` by the count
     monoid (geometry consistency asserted; see _drift_fold)."""
-    return _drift_fold(
-        spark.read.parquet(*_live_paths(state_dir))).drop("geom")
+    return _drift_fold(EpochLedger(spark, state_dir).read()).drop("geom")
 
 
 def read_drift(spark: SparkSession, state_dir: str, *,
@@ -1689,9 +1312,6 @@ def compact_drift(spark: SparkSession, state_dir: str, *,
                   keep_last: int = 0, gc: bool = True) -> int | None:
     """Log-compact a ``stream_drift`` ledger (per-(epoch, bin) count
     fold — epochs survive compaction separately, see _drift_fold)."""
-    from ..operators.index_ledger import touch_liveness
-
-    touch_liveness(state_dir)
     return compact_epoch_ledger(spark, state_dir, _drift_fold,
                                 keep_last=keep_last, gc=gc)
 
@@ -1735,8 +1355,6 @@ def curation_funnel_epoch(batch_df: DataFrame, epoch: str, *,
       directly, and stays NULL when the doc dies transitively
       (its component touched a history-loser).
     """
-    import os
-
     from ..catalog import literal_df
     from ..functions.text import quality_score
     from ..operators.cleaning import contamination
@@ -1916,8 +1534,6 @@ def stream_curation_funnel(docs: DataFrame, *, eval_docs: DataFrame,
     parquet ledgers, per-batch cost is O(batch) plus band/cell-pruned
     equi-joins, eval set broadcasts.
     """
-    import os
-
     fp_dir = os.path.join(state_dir, f"fpidx{n_fp_bands}")
     nd_dir = os.path.join(state_dir, f"ndidx{minhash_k}x{lsh_bands}")
     # the existence probe goes through the Hadoop FileSystem API like
@@ -1949,11 +1565,7 @@ def stream_curation_funnel(docs: DataFrame, *, eval_docs: DataFrame,
             minhash_k=minhash_k, lsh_bands=lsh_bands,
             min_containment=min_containment, n_fp_bands=n_fp_bands)
 
-    w = (docs.writeStream.foreachBatch(per_batch)
-         .option("checkpointLocation", checkpoint))
-    if trigger_once:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _foreach_batch(docs, per_batch, checkpoint, trigger_once)
 
 
 def stream_exact_dedup(docs: DataFrame, *, index_dir: str, out_dir: str,
@@ -1971,22 +1583,10 @@ def stream_exact_dedup(docs: DataFrame, *, index_dir: str, out_dir: str,
     LAKE but never in executor state — re-fetching a page months
     later still deduplicates.
     """
-    import os
-
     from ..operators.dedup import update_exact_dedup_index
 
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        fresh = update_exact_dedup_index(
-            batch_df.sparkSession, batch_df, index_dir,
-            id_col=id_col, text_col=text_col,
-            batch_id=str(int(batch_id)))
-        fresh.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={int(batch_id)}"))
-
-    w = (docs.writeStream.foreachBatch(per_batch)
-         .option("checkpointLocation", checkpoint))
-    if trigger_once:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _stream_index(
+        docs, lambda b, bid: update_exact_dedup_index(
+            b.sparkSession, b, index_dir, id_col=id_col, text_col=text_col,
+            batch_id=bid),
+        out_dir=out_dir, checkpoint=checkpoint, trigger_once=trigger_once)

@@ -2,9 +2,11 @@
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 
 import __spark_entry__ as entry_mod  # noqa: E402
 
@@ -35,7 +37,7 @@ def test_explain_audit_flags_global_windows(spark):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(_ROOT, "tools"))
     import explain_audit as ea
 
     df = spark.range(1000).withColumn("g", F.col("id") % 7)

@@ -6,12 +6,14 @@ data-scaling partition keys."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 
 import explain_audit as ea  # noqa: E402
 

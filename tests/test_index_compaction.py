@@ -415,7 +415,8 @@ def test_two_process_concurrency_soak_on_shared_lake_base():
     cmd = [sys.executable, "tools/check_oracle.py", SF_SMALL,
            "q121_compacted_lsh_pairs", "q122_compacted_exact_survivors",
            "q125_compacted_ann_topk"]
-    procs = [subprocess.Popen(cmd, cwd="/root/repo",
+    procs = [subprocess.Popen(cmd, cwd=os.path.dirname(
+                                  os.path.dirname(os.path.abspath(__file__))),
                               stdout=subprocess.PIPE,
                               stderr=subprocess.DEVNULL, text=True)
              for _ in range(2)]

@@ -716,10 +716,12 @@ def test_incremental_ann_index_matches_one_shot(spark, tmp_path):
         .select(F.col("vec_id").alias("qid"),
                 F.col("embedding").alias("qvec"), "cell")
     from pyspark.sql import Window
+
+    from etl_evm_chain_spark.functions.vectors import cosine
     scored = (assigned.join(F.broadcast(probed), "cell")
               .filter(F.col("qid") != F.col("cid"))
               .dropDuplicates(["qid", "cid"])
-              .withColumn("sim", sim.cosine("qvec", "cvec")))
+              .withColumn("sim", cosine("qvec", "cvec")))
     wr = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("cid"))
     want = {(r["qid"], r["cid"], r["rank"]) for r in
             scored.withColumn("rank", F.row_number().over(wr))

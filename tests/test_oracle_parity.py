@@ -20,9 +20,11 @@ pytestmark = pytest.mark.slow
 
 from etl_evm_chain_spark.plans.registry import all_specs
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 from check_oracle import compare  # noqa: E402
 
 from conftest import SF_SMALL  # noqa: E402

@@ -9,13 +9,15 @@ Usage: python tools/check_oracle.py [sf_dir] [query_name ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))))
 
 from etl_evm_chain_spark.catalog import TABLES  # noqa: E402
 from etl_evm_chain_spark.plans.registry import all_specs  # noqa: E402

@@ -41,7 +41,8 @@ import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))))
 
 from etl_evm_chain_spark.plans.registry import all_specs  # noqa: E402
 from etl_evm_chain_spark.session import get_spark  # noqa: E402

@@ -6,10 +6,12 @@ tags; non-query surfaces are the static table below.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections import defaultdict
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from etl_evm_chain_spark.plans.registry import all_specs  # noqa: E402
 
@@ -92,7 +94,7 @@ def main() -> None:
         qs = ", ".join(sorted(by_id.get(sid, []))) or "—"
         note = STATIC.get(sid, "")
         lines.append(f"| {sid} | {qs} | {note} |")
-    with open("/root/repo/docs/COVERAGE.md", "w") as f:
+    with open(os.path.join(ROOT, "docs", "COVERAGE.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote docs/COVERAGE.md ({len(ids)} ids)")
 

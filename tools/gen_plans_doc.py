@@ -7,10 +7,12 @@ single-shuffle windows). Re-run after plan-affecting changes.
 from __future__ import annotations
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -207,7 +209,7 @@ def main() -> None:
                 tree.strip()]
         out += ["", "\n\n".join(kept[:8]).strip()] if kept else []
         out += ["```", ""]
-    with open("/root/repo/docs/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "docs", "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print("wrote docs/PLANS.md")
 
