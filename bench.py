@@ -181,20 +181,22 @@ def main() -> None:
         vector_to_array("probability").getItem(1).alias("p")).agg(
         F.sum("p")).collect()
 
-    def _n_jobs() -> int:
-        # sequential Spark jobs so far — the per-query delta is the
-        # driver-round-trip count that dominates sub-second queries
-        # (diagnostics; capped by spark.ui.retainedJobs=1000 per scan,
-        # fine for per-query deltas of 1-30)
+    def _n_jobs(group: str) -> int:
+        # the query's sequential Spark jobs: the driver round trips
+        # that dominate sub-second queries (diagnostics). Counted per
+        # job group: the status store keeps only the last
+        # spark.ui.retainedJobs jobs, so a running count over the whole
+        # bench stops moving after ~1,000 jobs
         try:
+            spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
             return len(spark.sparkContext.statusTracker()
-                       .getJobIdsForGroup(None))
+                       .getJobIdsForGroup(group))
         except Exception:  # noqa: BLE001 — diagnostics only
             return -1
 
     timings: dict[str, float] = {}
     for spec in all_specs():
-        j0 = _n_jobs()
+        spark.sparkContext.setJobGroup(spec.name, spec.name)
         t0 = time.time()
         try:
             force(spec.fn(spark, sf_dir))
@@ -207,7 +209,7 @@ def main() -> None:
                 rt = spark._jvm.Runtime.getRuntime()
                 used = (rt.totalMemory() - rt.freeMemory()) >> 20
                 print(f"bench: {spec.name} {timings[spec.name]}s "
-                      f"jobs={_n_jobs() - j0} heap_used={used}MiB",
+                      f"jobs={_n_jobs(spec.name)} heap_used={used}MiB",
                       file=sys.stderr)
             except Exception:  # noqa: BLE001
                 pass

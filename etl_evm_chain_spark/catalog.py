@@ -106,6 +106,9 @@ def literal_df(spark: SparkSession, rows: list[tuple], schema):
     (bounded by what already sits on the driver): the literal tree is
     a driver-side expression, so row counts must stay small (callers
     with growing lists fall back to createDataFrame past a threshold).
+    Every value is its own literal, one py4j call or two each: WIDE
+    numeric rows (a centroid matrix) go in as one JSON string literal
+    instead (similarity._centroid_relation).
     Output is ONE partition — repartition() after, if parallelism
     matters (coalesce can only merge)."""
     from pyspark.sql import functions as F

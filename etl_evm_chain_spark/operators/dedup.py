@@ -912,10 +912,9 @@ def delete_from_exact_dedup_index(spark, docs: DataFrame,
     index holds nothing to fold)."""
     import os
 
-    from .index_ledger import compact_batch_index, touch_liveness
+    from .index_ledger import _fs, compact_batch_index, touch_liveness
 
-    jvm_p = spark._jvm.org.apache.hadoop.fs.Path(index_path)
-    fs = jvm_p.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jvm_p = _fs(spark, index_path)
     if not fs.exists(jvm_p):
         raise ValueError(
             f"no committed exact-dedup index at {index_path} — "

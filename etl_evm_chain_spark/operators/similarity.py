@@ -29,6 +29,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from .index_ledger import _fs, _jp
+
 # Retrieval geometry — tuned in round 7 under the q126 recall@k gate
 # (the gate exists so these can move without silently degrading
 # retrieval; measured recall@5 on the uniform-random embeddings
@@ -417,15 +419,22 @@ def ann_topk(corpus: DataFrame, queries: DataFrame, *,
     )
 
 
-def _ivf_centroids(corpus: DataFrame, id_col: str, vec_col: str,
-                   n_cells: int, salt: str) -> DataFrame:
+def _ivf_centroid_rows(corpus: DataFrame, id_col: str, vec_col: str,
+                       n_cells: int, salt: str) -> list:
     """Deterministic coarse-quantizer centroids: the ``n_cells`` rows
     with the smallest ``hash15(salt||id)`` — a stable pseudo-random
     spread fetched via TakeOrderedAndProject (partition-local top-N +
     driver merge of n_cells rows). No global window, no corpus count,
-    no training step; swapping in k-means centroids changes only this
-    tiny relation, not any consumer's plan.
+    no training step.
+
+    Returns the driver-held ``(cell, cvec_cent)`` rows, equal to what
+    collecting :func:`_ivf_centroids` returns (the values are the
+    corpus column's own), so consumers that only rank against them
+    (``_nearest_cells``, ``_ivfpq_adc_topk``, ``pq_train_books``)
+    take them directly instead of collecting the relation back.
     """
+    from pyspark.sql import Row
+
     from ..functions.text import hash15
 
     cent_rows = (
@@ -439,8 +448,18 @@ def _ivf_centroids(corpus: DataFrame, id_col: str, vec_col: str,
         .orderBy("_h", id_col).limit(n_cells)
         .collect()                       # n_cells rows — always tiny
     )
+    return [Row(cell=i, cvec_cent=list(r[vec_col]))
+            for i, r in enumerate(cent_rows)]
+
+
+def _ivf_centroids(corpus: DataFrame, id_col: str, vec_col: str,
+                   n_cells: int, salt: str) -> DataFrame:
+    """:func:`_ivf_centroid_rows` as a quantizer relation — the form
+    the landed indexes write; swapping in k-means centroids changes
+    only this tiny relation, not any consumer's plan."""
+    rows = _ivf_centroid_rows(corpus, id_col, vec_col, n_cells, salt)
     return _centroid_relation(corpus, vec_col,
-                              [list(r[vec_col]) for r in cent_rows])
+                              [r["cvec_cent"] for r in rows])
 
 
 def _centroid_relation(corpus: DataFrame, vec_col: str,
@@ -448,23 +467,37 @@ def _centroid_relation(corpus: DataFrame, vec_col: str,
     """The shared (cell, cvec_cent) quantizer relation every centroid
     source returns — one schema/literal construction so the three
     trainers (_ivf_centroids, kmeans_centroids, lloyd_centroids) can
-    never drift in shape."""
-    from pyspark.sql import types as T
+    never drift in shape.
 
-    from ..catalog import literal_df
+    The matrix enters the plan as ONE JSON string literal (from_json
+    + posexplode), not one literal per element, which cost a 16×64
+    quantizer ~2k py4j round trips. Python's float repr
+    round-trips exactly through the JSON parser and the cast to the
+    vector column's type is the one the per-element literals took, so
+    the values are bit-identical; the two coalesces never fire, they
+    only restate the NOT NULL shape the index writers land on disk.
+    """
+    import json
 
     vec_type = corpus.schema[vec_col].dataType
-    schema = T.StructType([
-        T.StructField("cell", T.IntegerType(), False),
-        T.StructField("cvec_cent", vec_type, False),
-    ])
-    return literal_df(
-        corpus.sparkSession,
-        [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-        schema)
+    mat = F.from_json(
+        F.lit(json.dumps([[float(x) for x in c] for c in cents])),
+        "array<array<double>>")
+    vec = F.transform("_v", lambda x: F.coalesce(x, F.lit(0.0))) \
+        .cast(vec_type)
+    return (corpus.sparkSession.range(1)
+            .select(F.posexplode(mat).alias("cell", "_v"))
+            .select("cell", F.coalesce(vec, F.array().cast(vec_type))
+                    .alias("cvec_cent")))
 
 
-def _nearest_cells(df: DataFrame, cents: DataFrame, id_col: str,
+def _cent_rows(cents) -> list:
+    """A centroid relation's rows; a driver-held row list as is."""
+    return cents if isinstance(cents, list) \
+        else cents.collect()  # n_cells rows — always tiny
+
+
+def _nearest_cells(df: DataFrame, cents, id_col: str,
                    vec_col: str, keep: int) -> DataFrame:
     """Assign each row its ``keep`` nearest centroids by cosine.
 
@@ -481,10 +514,10 @@ def _nearest_cells(df: DataFrame, cents: DataFrame, id_col: str,
     ``cents`` may be a DataFrame or an already-materialized row list
     (dicts/Rows) — the landed-index read paths fetch the tiny
     centroid relation on the driver (index_ledger.tiny_parquet_rows)
-    and skip the collect job here (round-10 job-count trim).
+    and the hash-sampled quantizers pass ``_ivf_centroid_rows``, so
+    neither pays a collect job here.
     """
-    cent_rows = cents if isinstance(cents, list) \
-        else cents.collect()  # n_cells rows — always tiny
+    cent_rows = _cent_rows(cents)
 
     @pandas_udf("array<int>")
     def nearest(vecs: pd.Series) -> pd.Series:
@@ -901,9 +934,14 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, *,
         cents = lloyd_centroids(corpus, id_col=id_col, vec_col=vec_col,
                                 n_cells=n_cells, n_iter=lloyd_iter)
     elif centroids == "hash":
-        cents = _ivf_centroids(corpus, id_col, vec_col, n_cells, salt="ivf:")
+        cents = _ivf_centroid_rows(corpus, id_col, vec_col, n_cells,
+                                   salt="ivf:")
     else:
         raise ValueError(f"unknown centroids source {centroids!r}")
+    # both sides rank against the same rows: the trained quantizers'
+    # relations (whose cast rounds their double centres) are collected
+    # once, the hash pick's rows are already on the driver
+    cents = _cent_rows(cents)
     assigned = _nearest_cells(corpus, cents, id_col, vec_col, n_assign) \
         .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"), "cell")
     probed = _nearest_cells(queries, cents, id_col, vec_col, n_probe) \
@@ -1003,7 +1041,7 @@ def pq_train_books(corpus: DataFrame, *, id_col: str = "vec_id",
                    vec_col: str = "embedding", n_sub: int = PQ_SUB,
                    n_cents: int = PQ_CENTS,
                    n_iter: int = PQ_TRAIN_ITER,
-                   coarse: DataFrame | None = None,
+                   coarse: DataFrame | list | None = None,
                    n_assign: int = IVF_ASSIGN):
     """Lloyd-trained PQ codebooks — the dial the residual path's
     honest-negative measurement pointed at (sampled residual books
@@ -1015,10 +1053,10 @@ def pq_train_books(corpus: DataFrame, *, id_col: str = "vec_id",
     only the tiny broadcast table differs.
 
     ``coarse=None`` trains over raw subvectors (plain PQ);
-    ``coarse=<centroid relation>`` trains over the per-replica
-    residuals x − centroid[cell] of the exploded ``n_assign`` soft
-    assignment — the SAME residual distribution the IVFADC encode
-    kernel quantizes, so train and encode cannot drift.
+    ``coarse=<centroid relation or its rows>`` trains over the
+    per-replica residuals x − centroid[cell] of the exploded
+    ``n_assign`` soft assignment — the SAME residual distribution the
+    IVFADC encode kernel quantizes, so train and encode cannot drift.
 
     Determinism protocol (the ``_lloyd_fit`` discipline applied per
     subspace, all subspaces in ONE job per iteration):
@@ -1042,6 +1080,8 @@ def pq_train_books(corpus: DataFrame, *, id_col: str = "vec_id",
     ``_lloyd_fit`` scale shape with a wider but still tiny key space.
     """
     import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
     spark = corpus.sparkSession
     corpus = corpus.filter(F.col(vec_col).isNotNull())
@@ -1050,12 +1090,12 @@ def pq_train_books(corpus: DataFrame, *, id_col: str = "vec_id",
         cmat = None
         base = corpus.select(id_col, vec_col)
     else:
-        cent_rows = sorted(coarse.collect(), key=lambda r: r["cell"])
+        cent_rows = sorted(_cent_rows(coarse), key=lambda r: r["cell"])
         cmat = np.stack([np.asarray(r["cvec_cent"], dtype=np.float64)
                          for r in cent_rows])
         books = _residual_seed_books(corpus, cmat, id_col, vec_col,
                                      n_sub, n_cents)
-        base = _nearest_cells(corpus, coarse, id_col, vec_col,
+        base = _nearest_cells(corpus, cent_rows, id_col, vec_col,
                               n_assign).select(id_col, vec_col, "cell")
     sub_d = books.shape[2]
 
@@ -1099,10 +1139,15 @@ def pq_train_books(corpus: DataFrame, *, id_col: str = "vec_id",
         agg = (emitted.groupBy("s", "c", "pos")
                .agg(F.sum(F.col("v").cast("decimal(38,18)")).alias("vs"),
                     F.count(F.lit(1)).alias("n"))
-               .collect())
+               .toArrow())
+        # float(Decimal) / n, vectorised: Decimal's float() parses its
+        # exact text, and so does Arrow's correctly rounded string ->
+        # double cast, bit for bit (Arrow's direct decimal -> double
+        # cast is not correctly rounded)
+        vs = pc.cast(pc.cast(agg["vs"], pa.string()), pa.float64())
         nxt = books.copy()
-        for r in agg:
-            nxt[r["s"], r["c"], r["pos"]] = float(r["vs"]) / r["n"]
+        nxt[agg["s"].to_numpy(), agg["c"].to_numpy(),
+            agg["pos"].to_numpy()] = vs.to_numpy() / agg["n"].to_numpy()
         books = nxt
     return books
 
@@ -1483,7 +1528,8 @@ def ivfpq_topk(corpus: DataFrame, queries: DataFrame, *,
     # can neither be encoded, assigned, nor probe)
     corpus = corpus.filter(F.col(vec_col).isNotNull())
     queries = queries.filter(F.col(vec_col).isNotNull())
-    cents = _ivf_centroids(corpus, id_col, vec_col, n_cells, salt="ipq:")
+    cents = _ivf_centroid_rows(corpus, id_col, vec_col, n_cells,
+                               salt="ipq:")
     if residual:
         books_r = (pq_train_books(
             corpus, id_col=id_col, vec_col=vec_col, n_sub=n_sub,
@@ -1514,7 +1560,7 @@ def ivfpq_topk(corpus: DataFrame, queries: DataFrame, *,
 
 
 def _ivfpq_adc_topk(indexed: DataFrame, queries: DataFrame,
-                    cents: DataFrame, books, *, id_col: str,
+                    cents, books, *, id_col: str,
                     vec_col: str, k: int, n_probe: int,
                     query_chunk: int) -> DataFrame:
     """IVF-pruned chunked ADC top-k over an ALREADY-INDEXED relation
@@ -1609,8 +1655,9 @@ def _ivfpq_adc_topk(indexed: DataFrame, queries: DataFrame,
     # query chunk was a pure round trip — _rank_cells is the same
     # fold code the distributed kernel runs, so values cannot drift).
     # A caller that already holds the rows (tiny_parquet_rows read of
-    # the landed centroid relation) skips the collect job entirely.
-    cent_rows = cents if isinstance(cents, list) else cents.collect()
+    # the landed centroid relation, or the hash-sampled pick) skips
+    # the collect job entirely.
+    cent_rows = _cent_rows(cents)
     parts = []
     for qrows, qdf in chunks:
         if qrows is None:
@@ -1659,7 +1706,7 @@ def _ivfpq_adc_topk(indexed: DataFrame, queries: DataFrame,
 
 
 def _ivfpq_residual(corpus: DataFrame, queries: DataFrame,
-                    cents: DataFrame, *, id_col: str, vec_col: str,
+                    cents, *, id_col: str, vec_col: str,
                     k: int, n_probe: int, n_assign: int, n_sub: int,
                     n_cents: int, books_r=None,
                     query_chunk: int = PQ_QUERY_CHUNK) -> DataFrame:
@@ -1682,7 +1729,7 @@ def _ivfpq_residual(corpus: DataFrame, queries: DataFrame,
     import numpy as np
 
     spark = corpus.sparkSession
-    cent_rows = sorted(cents.collect(), key=lambda r: r["cell"])
+    cent_rows = sorted(_cent_rows(cents), key=lambda r: r["cell"])
     cmat = np.stack([np.asarray(r["cvec_cent"], dtype=np.float64)
                      for r in cent_rows])
     if books_r is None:
@@ -1690,7 +1737,8 @@ def _ivfpq_residual(corpus: DataFrame, queries: DataFrame,
                                        n_sub, n_cents)
 
     # per-replica residual encode over the exploded assignment
-    replicas = _nearest_cells(corpus, cents, id_col, vec_col, n_assign)
+    replicas = _nearest_cells(corpus, cent_rows, id_col, vec_col,
+                              n_assign)
     bc_enc = spark.sparkContext.broadcast((cmat, books_r))
 
     def enc(batches):
@@ -1787,7 +1835,7 @@ def _ivfpq_residual(corpus: DataFrame, queries: DataFrame,
             continue
         qids, qnorms, tables = _pq_tables(qrows, books_r, id_col,
                                           vec_col)
-        probe_rows = _nearest_cells(qdf, cents, id_col, vec_col,
+        probe_rows = _nearest_cells(qdf, cent_rows, id_col, vec_col,
                                     n_probe).select(id_col,
                                                     "cell").collect()
         probes: dict = {}
@@ -1865,7 +1913,8 @@ def knn_classify_bucketed(emb: DataFrame, *, id_col: str = "vec_id",
     import numpy as np  # noqa: F401  (worker-side dependency)
 
     base = emb.select(id_col, vec_col, label_col)
-    cents = _ivf_centroids(base, id_col, vec_col, n_cells, salt="knn:")
+    cents = _ivf_centroid_rows(base, id_col, vec_col, n_cells,
+                               salt="knn:")
     # Distinct grouping-column name on the reference side: both sides
     # derive from the same plan and an identically-named key trips
     # Spark's ambiguous-self-join detection inside cogroup.
@@ -2396,10 +2445,9 @@ def update_ann_index(spark, batch: DataFrame, index_path: str, *,
     # failure on an EXISTING quantizer must surface, never silently
     # retrain and overwrite the frozen centroids (which would orphan
     # every prior batch's cell assignments).
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(cent_path)
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jvm_path = _fs(spark, cent_path)
     geom_path = os.path.join(index_path, "index_geom")
-    jvm_geom = spark._jvm.org.apache.hadoop.fs.Path(geom_path)
+    jvm_geom = _jp(spark, geom_path)
     if fs.exists(jvm_path):
         cents = spark.read.parquet(cent_path)
         # n_assign is an INDEX-time property, frozen like the
@@ -2555,8 +2603,7 @@ def probe_ann_index(spark, queries: DataFrame, index_path: str, *,
 
     cent_path = os.path.join(index_path, "centroids")
     cells_path = os.path.join(index_path, "cells")
-    jvm_cent = spark._jvm.org.apache.hadoop.fs.Path(cent_path)
-    fs = jvm_cent.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jvm_cent = _fs(spark, cent_path)
     if not fs.exists(jvm_cent):
         raise ValueError(
             f"no committed ANN index at {index_path} (missing "
@@ -2711,9 +2758,8 @@ def update_pq_index(spark, batch: DataFrame, index_path: str, *,
         return batch.select(
             F.col(id_col).alias("qid"), F.col(id_col).alias("cid"),
             F.lit(0.0).alias("sim"), F.lit(0).alias("rank")).limit(0)
-    jvm_books = spark._jvm.org.apache.hadoop.fs.Path(books_path)
-    fs = jvm_books.getFileSystem(spark._jsc.hadoopConfiguration())
-    jvm_geom = spark._jvm.org.apache.hadoop.fs.Path(geom_path)
+    fs, jvm_books = _fs(spark, books_path)
+    jvm_geom = _jp(spark, geom_path)
     if fs.exists(jvm_books):
         if not fs.exists(jvm_geom):
             # torn first build (books committed, geom write crashed):
@@ -2830,8 +2876,7 @@ def probe_pq_index(spark, queries: DataFrame, index_path: str, *,
     books_path = os.path.join(index_path, "books")
     geom_path = os.path.join(index_path, "pq_geom")
     codes_path = os.path.join(index_path, "codes")
-    jvm_geom = spark._jvm.org.apache.hadoop.fs.Path(geom_path)
-    fs = jvm_geom.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jvm_geom = _fs(spark, geom_path)
     if not fs.exists(jvm_geom):
         raise ValueError(
             f"no committed PQ index at {index_path} (missing pq_geom "
@@ -2875,8 +2920,7 @@ def probe_ivfpq_index(spark, queries: DataFrame, index_path: str, *,
     cent_path = os.path.join(index_path, "centroids")
     books_path = os.path.join(index_path, "books")
     geom_path = os.path.join(index_path, "ipq_geom")
-    jvm_geom = spark._jvm.org.apache.hadoop.fs.Path(geom_path)
-    fs = jvm_geom.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jvm_geom = _fs(spark, geom_path)
     if not fs.exists(jvm_geom):
         raise ValueError(
             f"no committed IVF-PQ index at {index_path} (missing "
@@ -2973,11 +3017,10 @@ def update_ivfpq_index(spark, batch: DataFrame, index_path: str, *,
             F.col(id_col).alias("qid"), F.col(id_col).alias("cid"),
             F.lit(0.0).alias("sim"), F.lit(0).alias("rank")).limit(0)
 
-    jvm_geom = spark._jvm.org.apache.hadoop.fs.Path(geom_path)
-    fs = jvm_geom.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jvm_geom = _fs(spark, geom_path)
 
     def _exists(p):
-        return fs.exists(spark._jvm.org.apache.hadoop.fs.Path(p))
+        return fs.exists(_jp(spark, p))
 
     from .index_ledger import tiny_parquet_rows
 
@@ -3069,10 +3112,8 @@ def _land_tombstones(spark, ids: DataFrame, index_path: str,
     import os
     import uuid
 
-    jvm_m = spark._jvm.org.apache.hadoop.fs.Path(
-        index_path if commit_marker is None
-        else os.path.join(index_path, commit_marker))
-    fs = jvm_m.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jvm_m = _fs(spark, index_path if commit_marker is None
+                    else os.path.join(index_path, commit_marker))
     if not fs.exists(jvm_m):
         raise ValueError(
             f"no committed {kind} index at {index_path} (missing "
@@ -3111,7 +3152,7 @@ def _clear_applied_tombs(spark, index_path: str, gen,
     no-op, and the next compaction clears again."""
     import os
 
-    from .index_ledger import _fs, _jp, committed_batch_dirs
+    from .index_ledger import committed_batch_dirs
 
     if gen is None or keep_last != 0:
         return
@@ -3140,8 +3181,7 @@ def describe_ivfpq_index(spark, index_path: str) -> dict:
     from .index_ledger import assert_live_batch_count, read_live_index
 
     geom_path = os.path.join(index_path, "ipq_geom")
-    jvm_geom = spark._jvm.org.apache.hadoop.fs.Path(geom_path)
-    fs = jvm_geom.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jvm_geom = _fs(spark, geom_path)
     if not fs.exists(jvm_geom):
         raise ValueError(
             f"no committed IVF-PQ index at {index_path} (missing "

@@ -1130,7 +1130,7 @@ def q_stream_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     for e in EpochLedger(spark, root).pending(range(_SH_EPOCHS)):
         sp.shard_epoch(sliced.filter(F.col("_e") == e).drop("_e"), e,
                        out_dir=root, key="doc_id", n_shards=N_SHARDS)
-    lake = spark.read.parquet(root)
+    lake = sp.read_shard_lake(spark, root)
     # q108's exact output contract over the streamed lake
     return (shard_manifest(
         lake.select("doc_id", "text", "shard", "ord_key"))

@@ -533,7 +533,7 @@ def stream_export_shards(docs: DataFrame, *, out_dir: str, checkpoint: str,
 
     Exactly-once like stream_near_dups (overwrite on replay). Readers
     see one lake with (batch_id, shard) partition columns; the global
-    receipt is ``shard_manifest(spark.read.parquet(out_dir))``
+    receipt is ``shard_manifest(read_shard_lake(spark, out_dir))``
     (checksums are order- and batch-insensitive sums, so incremental
     and one-shot exports agree — tested).
     """
@@ -564,6 +564,15 @@ def shard_epoch(batch_df: DataFrame, batch_id: int, *, out_dir: str,
      .write.mode("overwrite").partitionBy("shard")
      .parquet(os.path.join(out_dir, f"batch_id={int(batch_id)}")))
     touch_liveness(out_dir)
+
+
+def read_shard_lake(spark: SparkSession, out_dir: str) -> DataFrame:
+    """The shard lake's COMMITTED epochs (:class:`EpochLedger`
+    listing: an epoch torn by a crash mid-write is not read until its
+    replay commits it), with the (batch_id, shard) partition columns
+    of a plain read of ``out_dir``."""
+    return spark.read.option("basePath", out_dir).parquet(
+        *EpochLedger(spark, out_dir).live_paths())
 
 
 def stream_jsonl(spark: SparkSession, src_dir: str, schema, *,
@@ -723,15 +732,6 @@ def read_token_sketch(spark: SparkSession, sketch_dir: str) -> DataFrame:
     fail the fold's GLOBAL assertion. Feed the result to
     ``operators.sketches.cm_estimate``."""
     return _cm_epoch_fold(EpochLedger(spark, sketch_dir).read())
-
-
-# the torn-ledger and self-compaction tests probe these two directly
-def _live_paths(state_dir: str) -> list[str]:
-    return EpochLedger(SparkSession.active(), state_dir).live_paths()
-
-
-def _max_compact(state_dir: str) -> int | None:
-    return EpochLedger(SparkSession.active(), state_dir).baseline()
 
 
 def compact_epoch_ledger(spark: SparkSession, state_dir: str,

@@ -996,6 +996,94 @@ def test_pq_train_books_residual_mode(spark):
     assert np.array_equal(resid, resid_rep)
 
 
+def _per_element_centroid_twin(corpus, vec_col, cents):
+    """The per-element literal construction of the centroid relation
+    (one ``F.lit(x).cast(...)`` per value) that ``_centroid_relation``
+    replaced: the reference for its schema and bits."""
+    from pyspark.sql import types as T
+
+    from etl_evm_chain_spark.catalog import literal_df
+
+    schema = T.StructType([
+        T.StructField("cell", T.IntegerType(), False),
+        T.StructField("cvec_cent", corpus.schema[vec_col].dataType, False),
+    ])
+    return literal_df(corpus.sparkSession,
+                      [(i, [float(x) for x in c])
+                       for i, c in enumerate(cents)], schema)
+
+
+def test_centroid_relation_matches_per_element_literals(spark):
+    """The one-literal centroid relation equals the per-element
+    literal one: the same schema, nullability included (the index
+    writers land it on disk), and the same bits in every value, for
+    float32 and float64 vector columns and for double centres the
+    float32 cast must round (a tie to even, a subnormal, -0.0)."""
+    import struct
+
+    import numpy as np
+    from pyspark.sql import types as T
+
+    cents = (np.random.default_rng(3).standard_normal((6, 8)) / 3).tolist()
+    cents[1][0] = -0.0
+    cents[2][1] = 1e-40
+    cents[3][2] = 1.0 + 2.0 ** -24
+    for elem, fmt in ((T.FloatType(), "f"), (T.DoubleType(), "d")):
+        for contains_null in (True, False):
+            corpus = spark.createDataFrame([(1, [0.5] * 8)], T.StructType([
+                T.StructField("vec_id", T.LongType()),
+                T.StructField("embedding", T.ArrayType(elem, contains_null)),
+            ]))
+            got = sim._centroid_relation(corpus, "embedding", cents)
+            ref = _per_element_centroid_twin(corpus, "embedding", cents)
+            assert got.schema == ref.schema
+
+            def bits(df):
+                return [(r["cell"], struct.pack(f"{len(r['cvec_cent'])}{fmt}",
+                                                *r["cvec_cent"]))
+                        for r in df.collect()]
+
+            assert bits(got) == bits(ref)
+
+
+def test_ivf_centroid_rows_equal_the_relation(spark):
+    """The driver-held hash-sampled rows are what collecting the
+    quantizer relation returns, so consumers may take either."""
+    emb = load_table(spark, SF_SMALL, "embeddings")
+    rows = sim._ivf_centroid_rows(emb, "vec_id", "embedding", 16, "ipq:")
+    rel = sim._ivf_centroids(emb, "vec_id", "embedding", 16, "ipq:")
+    assert len(rows) == 16 and rows == rel.collect()
+
+
+def _build_jobs(spark, build) -> int:
+    """Spark jobs launched while ``build()`` constructs a plan."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_hash_quantizer_plans_build_without_centroid_round_trips(spark):
+    """The hash-sampled quantizers rank against the rows their pick
+    already collected: building ``ivf_topk`` runs exactly the pick's
+    job, and ``ivfpq_topk`` with given books at most the pick plus its
+    query probe (no centroid relation is collected back)."""
+    emb = load_table(spark, SF_SMALL, "embeddings")
+    q = emb.filter(F.col("vec_id") < 5)
+    books = sim._pq_books(emb, "vec_id", "embedding", sim.PQ_SUB,
+                          sim.PQ_CENTS)
+    assert _build_jobs(spark, lambda: sim.ivf_topk(emb, q, k=3)) == 1
+    assert _build_jobs(
+        spark, lambda: sim.ivfpq_topk(emb, q, k=3, books=books)) <= 2
+
+
 def test_rerank_exact_recovers_brute_force_within_shortlist(spark):
     """Two-stage retrieval semantics: (a) reranking a WIDE ADC
     shortlist recovers the exact brute-force top-k whenever the true

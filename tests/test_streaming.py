@@ -11,6 +11,7 @@ import pandas as pd
 
 from pyspark.sql import functions as F
 
+from etl_evm_chain_spark.operators.index_ledger import EpochLedger
 from etl_evm_chain_spark.sources.abi import RAW_LOG_SCHEMA
 from etl_evm_chain_spark.streaming import pipeline as sp
 from tests.test_evm import SWAPISH, _mklog, _word
@@ -443,6 +444,38 @@ def test_stream_export_shards_incremental_equals_one_shot(spark, tmp_path):
                 for r in shard_manifest(shard_assignment(
                     all_docs, key="doc_id", n_shards=8)).collect()}
     assert streamed == one_shot
+
+
+def test_shard_lake_receipt_counts_committed_epochs_only(spark, tmp_path):
+    """The documented receipt reads the lake through the epoch
+    ledger: an epoch torn by a crash mid-write (no ``_SUCCESS``) is
+    not in it, so the manifest equals the one-shot manifest of the
+    committed epochs' documents alone."""
+    import os
+
+    from conftest import SF_SMALL
+    from etl_evm_chain_spark.catalog import load_table
+    from etl_evm_chain_spark.operators.curation import (shard_assignment,
+                                                        shard_manifest)
+
+    docs = load_table(spark, SF_SMALL, "documents").select("doc_id", "text")
+    out = str(tmp_path / "shards")
+    for e in range(3):
+        sp.shard_epoch(docs.filter(F.col("doc_id") % 3 == e), e,
+                       out_dir=out, n_shards=8)
+    os.remove(os.path.join(out, "batch_id=2", "_SUCCESS"))
+
+    committed = docs.filter(F.col("doc_id") % 3 < 2)
+    lake = sp.read_shard_lake(spark, out)
+    assert {"batch_id", "shard"} <= set(lake.columns)
+    got = {r["shard"]: (r["n_docs"], r["checksum"])
+           for r in shard_manifest(lake).collect()}
+    want = {r["shard"]: (r["n_docs"], r["checksum"])
+            for r in shard_manifest(shard_assignment(
+                committed, key="doc_id", n_shards=8)).collect()}
+    assert got == want
+    assert sum(n for n, _ in got.values()) == committed.count() \
+        < docs.count()
 
 
 def test_stream_export_shards_soak_replay_and_crash(spark, tmp_path):
@@ -1032,7 +1065,7 @@ def test_ledger_with_only_torn_epochs_refuses_to_read(spark, tmp_path):
     with open(os.path.join(d, "part-00000.parquet"), "wb") as f:
         f.write(b"PAR1torn")
     with pytest.raises(ValueError, match="uncommitted"):
-        sp._live_paths(skd)
+        EpochLedger(spark, skd).live_paths()
     # an empty/missing ledger still surfaces the normal read error,
     # not the torn-state one
     with pytest.raises(Exception, match="PATH_NOT_FOUND|Path does not exist"):
@@ -1836,7 +1869,7 @@ def test_stream_drift_self_compacts(spark, tmp_path):
         sp.drift_epoch(spark.createDataFrame(rows, "q double"), i,
                        state_dir=twin, value="q", n_bins=4)
 
-    assert sp._max_compact(std) is not None   # a baseline committed
+    assert EpochLedger(spark, std).baseline() is not None   # committed
     as_set = lambda df: sorted(  # noqa: E731
         tuple(r) for r in df.collect())
     assert as_set(sp.read_drift_hist(spark, std)) \
@@ -2024,7 +2057,7 @@ def test_stream_kmv_self_compacts(spark, tmp_path):
                      state_dir=twin, keys=keys,
                      group_cols=["event_type"], k=8)
 
-    assert sp._max_compact(std) is not None   # a baseline committed
+    assert EpochLedger(spark, std).baseline() is not None   # committed
     assert _kmv_long(sp.read_kmv_sketch(spark, std, ["event_type"],
                                         k=8)) \
         == _kmv_long(sp.read_kmv_sketch(spark, twin, ["event_type"],

@@ -71,14 +71,14 @@ def main() -> None:
         "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)")).agg(
         F.sum("a")).collect()
 
-    def _n_jobs() -> int:
-        # NOTE (ADVICE r9): getJobIdsForGroup is capped by
-        # spark.ui.retainedJobs (default 1000) — a session that runs
-        # >1000 jobs silently undercounts later deltas. Diagnostics
-        # only; bench_one sessions stay far under the cap per rep.
+    def _n_jobs(group: str) -> int:
+        # counted per job group: the status store keeps only the last
+        # spark.ui.retainedJobs jobs, so a running count over the
+        # session stops moving after ~1,000 jobs. Diagnostics only.
         try:
+            spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
             return len(spark.sparkContext.statusTracker()
-                       .getJobIdsForGroup(None))
+                       .getJobIdsForGroup(group))
         except Exception:  # noqa: BLE001 — diagnostics only
             return -1
 
@@ -88,13 +88,14 @@ def main() -> None:
         spec = specs[name]
         times = []
         jobs = []
-        for _ in range(reps):
-            j0 = _n_jobs()
+        for rep in range(reps):
+            group = f"{name}#{rep}"
+            spark.sparkContext.setJobGroup(group, group)
             t0 = time.time()
             spec.fn(spark, sf_dir).write.format("noop").mode(
                 "overwrite").save()
             times.append(round(time.time() - t0, 3))
-            jobs.append(_n_jobs() - j0)
+            jobs.append(_n_jobs(group))
             _drop_blocks(spark)
         out[name] = {"reps": times, "min": min(times),
                      "median": round(statistics.median(times), 3),
