@@ -74,11 +74,10 @@ PQ_TRAIN_ITER = 1     # Lloyd iterations for the default trained
 # train_iter extra corpus passes; iters 2/3 measured equal-or-worse
 # than 1 on every fixture, so one pass is the default; 0 = the
 # sampled books)
-PQ_QUERY_CHUNK = 4096  # pq_topk switches to the chunked path above
-# this many queries: per-query ADC tables cost n_sub×n_cents×8 B
+PQ_QUERY_CHUNK = 4096  # the ADC engine streams query sets larger
+# than this in chunks: per-query ADC tables cost n_sub×n_cents×8 B
 # (64 KiB at the defaults), so one chunk's driver/broadcast footprint
-# is ~256 MiB while a million-query set would need ~65 GB — the
-# round-7 verdict's noted trade-off, now closed (see _pq_topk_chunked)
+# is ~256 MiB while a million-query set would need ~65 GB (_adc_topk)
 
 
 def cosine_arrow(a, b):
@@ -430,7 +429,7 @@ def _ivf_centroid_rows(corpus: DataFrame, id_col: str, vec_col: str,
     Returns the driver-held ``(cell, cvec_cent)`` rows, equal to what
     collecting :func:`_ivf_centroids` returns (the values are the
     corpus column's own), so consumers that only rank against them
-    (``_nearest_cells``, ``_ivfpq_adc_topk``, ``pq_train_books``)
+    (``_nearest_cells``, ``_adc_topk``, ``pq_train_books``)
     take them directly instead of collecting the relation back.
     """
     from pyspark.sql import Row
@@ -527,10 +526,10 @@ def _nearest_cells(df: DataFrame, cents, id_col: str,
 
 
 def _rank_cells(raw_vecs, cent_rows, keep: int) -> list:
-    """Shared cell-ranking core of :func:`_nearest_cells` AND the
-    driver-side probe assignment of ``_ivfpq_adc_topk`` (whose query
-    chunk is already collected) — ONE implementation so the two paths
-    cannot drift. Returns each input vector's ``keep`` nearest cells.
+    """The one cell ranker: the kernel of :func:`_nearest_cells`, the
+    driver-side probe assignment of ``_adc_topk`` (whose query chunk
+    is already collected) and the residual seed books' nearest cell.
+    Returns each input vector's ``keep`` nearest cells.
 
     Row-vectorized sequential folds (round-9): the per-row /
     per-centroid python loop is O(n·n_cells) interpreter iterations
@@ -972,11 +971,21 @@ def _probe_score_topk(assigned: DataFrame, probed: DataFrame,
     )
 
 
+def _as_books(mat, n_sub: int):
+    """Sampled rows ``(n, d)`` as the ``(n_sub, n, d / n_sub)`` codebook
+    array: books[s] holds the subspace-s slices of the rows."""
+    d = mat.shape[1]
+    if d % n_sub:
+        raise ValueError(f"dim {d} not divisible by n_sub {n_sub}")
+    return mat.reshape(len(mat), n_sub, d // n_sub).transpose(1, 0, 2)
+
+
 def _pq_books(corpus: DataFrame, id_col: str, vec_col: str,
               n_sub: int, n_cents: int):
-    """Deterministic sampled codebooks: books[s] = (n_cents, sub_d)
-    array for subspace s (shared by the one-shot and chunked paths —
-    ONE definition, so they cannot drift)."""
+    """Deterministic sampled codebooks: the ``n_cents`` corpus rows with
+    the smallest ``hash15('pq:'||id)``, split into subspaces. None when
+    the corpus holds no vector — the caller decides on this collect
+    that there is nothing to score."""
     import numpy as np
 
     from ..functions.text import hash15
@@ -990,51 +999,59 @@ def _pq_books(corpus: DataFrame, id_col: str, vec_col: str,
             .alias("_h"))
         .orderBy("_h").limit(n_cents).collect()
     )
-    d = len(cent_rows[0][vec_col])
-    if d % n_sub:
-        raise ValueError(f"dim {d} not divisible by n_sub {n_sub}")
-    books = np.stack([np.asarray(r[vec_col], dtype=np.float64)
-                      for r in cent_rows])
-    return books.reshape(len(cent_rows), n_sub, d // n_sub) \
-        .transpose(1, 0, 2)
+    if not cent_rows:
+        return None
+    return _as_books(np.stack([np.asarray(r[vec_col], dtype=np.float64)
+                               for r in cent_rows]), n_sub)
 
 
-def _residual_seed_books(corpus: DataFrame, cmat, id_col: str,
+def _cent_matrix(cents):
+    """Centroid rows sorted by cell and their float64 matrix (row i is
+    the i-th cell's centre)."""
+    import numpy as np
+
+    rows = sorted(_cent_rows(cents), key=lambda r: r["cell"])
+    return rows, np.stack([np.asarray(r["cvec_cent"], dtype=np.float64)
+                           for r in rows])
+
+
+def _residual_seed_books(corpus: DataFrame, cents, id_col: str,
                          vec_col: str, n_sub: int, n_cents: int):
     """Deterministic sampled RESIDUAL codebooks: the residuals of the
     ``n_cents`` corpus rows with smallest ``hash15('pqr:'||id)``, each
-    vs its own nearest coarse cell — the residual-path counterpart of
-    ``_pq_books``, shared by the sampled scoring path and as the
-    Lloyd-training init so the trained path starts from the exact
-    geometry the sampled path ships."""
+    vs its own nearest coarse cell (ranked by :func:`_rank_cells`) —
+    the residual counterpart of ``_pq_books`` and the Lloyd-training
+    init of the residual books."""
     import numpy as np
 
     from ..functions.text import hash15
 
-    def _nearest(v):
-        sims = np.empty(len(cmat))
-        nv = np.sqrt(np.cumsum(v * v)[-1]) if len(v) else 0.0
-        for j in range(len(cmat)):
-            c = cmat[j]
-            denom = nv * np.sqrt(np.cumsum(c * c)[-1])
-            sims[j] = (np.cumsum(v * c)[-1] / denom
-                       if denom != 0 else -np.inf)
-        return np.lexsort((np.arange(len(cmat)), -sims))
-
+    cent_rows, cmat = _cent_matrix(cents)
+    row_of = {r["cell"]: i for i, r in enumerate(cent_rows)}
     sample = (corpus.select(
         F.col(vec_col),
         hash15(F.concat(F.lit("pqr:"), F.col(id_col).cast("string")))
         .alias("_h"))
         .orderBy("_h").limit(n_cents).collect())
-    d = len(sample[0][vec_col])
-    if d % n_sub:
-        raise ValueError(f"dim {d} not divisible by n_sub {n_sub}")
-    res = []
-    for r in sample:
-        v = np.asarray(r[vec_col], dtype=np.float64)
-        res.append(v - cmat[_nearest(v)[0]])
-    return np.stack(res).reshape(len(res), n_sub, d // n_sub) \
-        .transpose(1, 0, 2)
+    vecs = [np.asarray(r[vec_col], dtype=np.float64) for r in sample]
+    nearest = _rank_cells(vecs, cent_rows, 1)
+    return _as_books(np.stack([v - cmat[row_of[cells[0]]]
+                               for v, cells in zip(vecs, nearest)]),
+                     n_sub)
+
+
+def _pq_encode(mat, books):
+    """The one PQ encoder: codes[i, s] = argmin_c ||mat[i]_s −
+    books[s, c]||² over the subspace-s slice of each row (first-match
+    ties, row-local, so partitioning-independent)."""
+    import numpy as np
+
+    subs = mat.reshape(len(mat), len(books), -1)
+    codes = np.empty((len(mat), len(books)), dtype=np.int64)
+    for s in range(len(books)):
+        d2 = ((subs[:, s, None, :] - books[s][None, :, :]) ** 2).sum(axis=2)
+        codes[:, s] = d2.argmin(axis=1)
+    return codes
 
 
 def pq_train_books(corpus: DataFrame, *, id_col: str = "vec_id",
@@ -1049,8 +1066,9 @@ def pq_train_books(corpus: DataFrame, *, id_col: str = "vec_id",
     around centroids the sample never adapts to; k-means training is
     what FAISS's IVFPQ trains, Jégou et al. 2011 §III). Returns the
     same ``(n_sub, n_cents, sub_d)`` ndarray as ``_pq_books`` /
-    ``_residual_seed_books``, so every consumer's plan is unchanged —
-    only the tiny broadcast table differs.
+    ``_residual_seed_books`` (``n_iter=0`` returns them untrained), so
+    every consumer's plan is unchanged — only the tiny broadcast table
+    differs. None when the corpus holds no vector.
 
     ``coarse=None`` trains over raw subvectors (plain PQ);
     ``coarse=<centroid relation or its rows>`` trains over the
@@ -1063,7 +1081,7 @@ def pq_train_books(corpus: DataFrame, *, id_col: str = "vec_id",
 
     - init: the sampled codebooks the untrained path ships — a stable
       pseudo-random spread, no training randomness;
-    - assignment: per-row numpy argmin over the broadcast books
+    - assignment: :func:`_pq_encode` over the broadcast books
       (first-match ties, row-local → partitioning-independent);
     - update: the kernel emits one ``(s, c, pos, v)`` row per
       assigned subvector component and ONE shuffle keyed
@@ -1090,13 +1108,13 @@ def pq_train_books(corpus: DataFrame, *, id_col: str = "vec_id",
         cmat = None
         base = corpus.select(id_col, vec_col)
     else:
-        cent_rows = sorted(_cent_rows(coarse), key=lambda r: r["cell"])
-        cmat = np.stack([np.asarray(r["cvec_cent"], dtype=np.float64)
-                         for r in cent_rows])
-        books = _residual_seed_books(corpus, cmat, id_col, vec_col,
+        cent_rows, cmat = _cent_matrix(coarse)
+        books = _residual_seed_books(corpus, cent_rows, id_col, vec_col,
                                      n_sub, n_cents)
         base = _nearest_cells(corpus, cent_rows, id_col, vec_col,
                               n_assign).select(id_col, vec_col, "cell")
+    if books is None:
+        return None
     sub_d = books.shape[2]
 
     def make_kernel(bc):
@@ -1111,25 +1129,18 @@ def pq_train_books(corpus: DataFrame, *, id_col: str = "vec_id",
                     .astype(np.float64)
                 if cmat_b is not None:
                     mat = mat - cmat_b[pdf["cell"].to_numpy()]
-                subs = mat.reshape(len(mat), n_sub, -1)
+                codes = _pq_encode(mat, books_b)
                 n = len(mat)
-                out_s, out_c, out_p, out_v = [], [], [], []
-                for s in range(n_sub):
-                    d2 = ((subs[:, s, None, :]
-                           - books_b[s][None, :, :]) ** 2).sum(axis=2)
-                    codes = d2.argmin(axis=1)
-                    out_s.append(np.full(n * sub_d, s,
-                                         dtype=np.int32))
-                    out_c.append(np.repeat(codes, sub_d)
-                                 .astype(np.int32))
-                    out_p.append(np.tile(
-                        np.arange(sub_d, dtype=np.int32), n))
-                    out_v.append(subs[:, s, :].ravel())
+                # one row per (subspace, row, component), subspace-major
                 yield pd.DataFrame({
-                    "s": np.concatenate(out_s),
-                    "c": np.concatenate(out_c),
-                    "pos": np.concatenate(out_p),
-                    "v": np.concatenate(out_v)})
+                    "s": np.repeat(np.arange(n_sub, dtype=np.int32),
+                                   n * sub_d),
+                    "c": np.repeat(codes.T.ravel(), sub_d)
+                    .astype(np.int32),
+                    "pos": np.tile(np.arange(sub_d, dtype=np.int32),
+                                   n * n_sub),
+                    "v": mat.reshape(n, n_sub, sub_d)
+                    .transpose(1, 0, 2).ravel()})
         return kernel
 
     for _ in range(n_iter):
@@ -1168,13 +1179,13 @@ def _pq_tables(qrows, books, id_col: str, vec_col: str):
 
 
 def _pq_adc_emit(sims, qids_b, ids_b, k):
-    """Per-partition local top-k emission shared by both kernels:
-    rank on the full-precision sim, emit floor-truncated (the
+    """Dense emission: each query's local top-k over every row of the
+    batch. Ranks on the full-precision sim, emits floor-truncated (the
     engine-portable rule every sim column here follows). Self rows
     are FILTERED before ranking, not -inf-masked: on a partition
     with fewer than k candidates a masked self row would still be
     emitted as a (qid==cid, -Infinity) result, violating the
-    self-excluded contract (the ivfpq kernels' sel-mask rule)."""
+    self-excluded contract."""
     import numpy as np
 
     out_q, out_c, out_s = [], [], []
@@ -1190,6 +1201,189 @@ def _pq_adc_emit(sims, qids_b, ids_b, k):
         out_s.extend(float(np.floor(row[j] * 1e6) / 1e6)
                      for j in order)
     return out_q, out_c, out_s
+
+
+def _ivf_adc_emit(qids_b, qnorms_b, tables_b, probes_b, qdotc_b,
+                  ids_b, norms_b, codes_b, cells_b, k):
+    """IVF emission: each query scores only the rows in its probed
+    cells. The score is Σ_s tables[q, s, code_s] plus the exact
+    ⟨q, centroid[cell]⟩ term of residual codes (``qdotc_b``; None for
+    plain codes, whose base term is zero). A row replicated into
+    several probed cells keeps its best-scoring replica — for plain
+    codes the replicas score identically, so this is the identity."""
+    import numpy as np
+
+    out_q, out_c, out_s = [], [], []
+    for qi, qid in enumerate(qids_b):
+        pc = probes_b.get(qid)
+        if not pc:
+            continue
+        sel = np.isin(cells_b, pc) & (ids_b != qid)
+        if not sel.any():
+            continue
+        ids_s = ids_b[sel]
+        codes_s = codes_b[sel]
+        approx = (np.array([qdotc_b[(qid, c)] for c in cells_b[sel]])
+                  if qdotc_b is not None else np.zeros(len(ids_s)))
+        for s in range(tables_b.shape[1]):
+            approx += tables_b[qi, s, codes_s[:, s]]
+        sims = approx / (qnorms_b[qi] * norms_b[sel])
+        # sort by (-sim, id) and keep each id's first (= best) replica
+        srt = np.lexsort((ids_s, -sims))
+        _, first = np.unique(ids_s[srt], return_index=True)
+        top = srt[np.sort(first)][:k]
+        out_q.extend([int(qid)] * len(top))
+        out_c.extend(int(x) for x in ids_s[top])
+        out_s.extend(float(np.floor(sims[j] * 1e6) / 1e6) for j in top)
+    return out_q, out_c, out_s
+
+
+def _adc_kernel(bc, id_col: str, vec_col: str, k: int):
+    """The one ADC mapInPandas kernel over the broadcast ``(books,
+    qids, qnorms, tables, probes, qdotc)``. Raw rows (``books`` set)
+    are encoded in the kernel; codes rows carry their norm and codes.
+    Without probes every row scores against every query (the dense
+    all-queries matrix); with probes each query scores its probed
+    cells."""
+    def kernel(batches):
+        import numpy as np
+        import pandas as pd
+
+        books_b, qids_b, qnorms_b, tables_b, probes_b, qdotc_b = bc.value
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            ids_b = pdf[id_col].to_numpy()
+            if books_b is not None:
+                mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+                norms_b = np.sqrt((mat * mat).sum(axis=1))
+                codes_b = _pq_encode(mat, books_b)
+            else:
+                norms_b = pdf["norm"].to_numpy()
+                codes_b = np.stack(pdf["codes"].to_numpy()) \
+                    .astype(np.int64)
+            if probes_b is None:
+                # dense ADC: approx[q, i] = Σ_s tables[q, s, codes[i, s]]
+                approx = np.zeros((len(qids_b), len(ids_b)))
+                for s in range(tables_b.shape[1]):
+                    approx += tables_b[:, s, codes_b[:, s]]
+                sims = approx / (qnorms_b[:, None] * norms_b[None, :])
+                out = _pq_adc_emit(sims, qids_b, ids_b, k)
+            else:
+                out = _ivf_adc_emit(qids_b, qnorms_b, tables_b, probes_b,
+                                    qdotc_b, ids_b, norms_b, codes_b,
+                                    pdf["cell"].to_numpy(), k)
+            yield pd.DataFrame(dict(zip(("qid", "cid", "sim"), out)))
+    return kernel
+
+
+def _adc_topk(src: DataFrame, queries: DataFrame, books, *, id_col: str,
+              vec_col: str, k: int, query_chunk: int, cents=None,
+              n_probe: int = 0, residual: bool = False) -> DataFrame:
+    """The one PQ-ADC top-k engine behind ``pq_topk``, ``ivfpq_topk``
+    (plain and residual) and the landed PQ / IVF-PQ indexes.
+
+    ``src`` is either the raw corpus ``(id, vec)`` — encoded inside the
+    scoring kernel, so a one-shot ``pq_topk`` stays one Python stage —
+    or a codes relation ``(id, norm, codes[, cell])`` from
+    :func:`pq_encode` or a landed ledger. With ``cents`` each query
+    probes its ``n_probe`` nearest cells (:func:`_rank_cells` on the
+    driver — the same fold code as the corpus side's
+    ``_nearest_cells``) and only rows in those cells score; each
+    chunk's input is pre-filtered to the union of its probed cells, so
+    in a one-shot pass a cell-partitioned ledger prunes directories at
+    the parquet scan (a chunked run filters its pinned copy).
+    ``residual`` adds the exact ⟨q, centroid[cell]⟩ term that residual
+    codes leave out.
+
+    One collect of at most query_chunk + 1 query rows decides the
+    path. A bounded query set is scored in one pass from those rows.
+    Past ``query_chunk`` queries the set streams through
+    ``ceil(n_q / query_chunk)`` xxhash64-sliced chunks (a partition of
+    the query set, so no cross-chunk dedup): a raw corpus is encoded
+    once, the scored relation and the queries are pinned, and each
+    chunk's candidates are landed eagerly before its ADC-table
+    broadcast is unpersisted — live broadcast stays O(query_chunk ·
+    n_sub · n_cents · 8 B), ~256 MiB at the defaults, however large
+    the query set.
+
+    Codes relations dedup (qid, cid) by max sim before the global
+    rank window: a landed id re-ingested under a new batch, or an IVF
+    replica surfacing from two partitions, would otherwise occupy two
+    rank slots. The raw corpus scores each row once and skips it.
+    """
+    import functools
+
+    import numpy as np
+
+    spark = src.sparkSession
+    raw = "codes" not in src.columns
+    qproj = queries.select(id_col, vec_col)
+    head = qproj.limit(query_chunk + 1).collect()
+    chunked = len(head) > query_chunk
+    if not chunked:
+        chunks = [head]
+    else:
+        if raw:
+            src, raw = pq_encode(src, books, id_col=id_col,
+                                 vec_col=vec_col), False
+        src = src.localCheckpoint()
+        qpin = qproj.localCheckpoint()
+        n_chunks = -(-qpin.count() // query_chunk)
+        chunks = [qpin.filter(F.pmod(F.xxhash64(F.col(id_col)),
+                                     F.lit(n_chunks)) == i)
+                  for i in range(n_chunks)]
+    src = src.select(id_col, vec_col) if raw else src.select(
+        id_col, "norm", "codes", *(["cell"] if cents is not None else []))
+    cent_rows = None if cents is None else _cent_rows(cents)
+    cvec = ({r["cell"]: np.asarray(r["cvec_cent"], dtype=np.float64)
+             for r in cent_rows} if residual else None)
+
+    parts = []
+    for qrows in chunks:
+        if not isinstance(qrows, list):
+            qrows = qrows.collect()
+        if not qrows:
+            continue
+        qids, qnorms, tables = _pq_tables(qrows, books, id_col, vec_col)
+        probes = qdotc = None
+        part_src = src
+        if cent_rows is not None:
+            ranked = _rank_cells([r[vec_col] for r in qrows], cent_rows,
+                                 n_probe)
+            probes = {r[id_col]: pc for r, pc in zip(qrows, ranked)}
+            if residual:
+                qdotc = {(r[id_col], c): float(np.cumsum(
+                    np.asarray(r[vec_col], dtype=np.float64) * cvec[c])[-1])
+                    for r in qrows for c in probes[r[id_col]]}
+            part_src = src.filter(F.col("cell").isin(
+                sorted({c for pc in probes.values() for c in pc})))
+        bc = spark.sparkContext.broadcast(
+            (books if raw else None, qids, qnorms, tables, probes, qdotc))
+        part = part_src.mapInPandas(_adc_kernel(bc, id_col, vec_col, k),
+                                    "qid long, cid long, sim double")
+        if chunked:
+            part = part.localCheckpoint()
+            bc.unpersist()
+        parts.append(part)
+
+    if not parts:
+        return _empty_topk(spark)
+    local = functools.reduce(DataFrame.unionByName, parts)
+    if not raw:
+        local = local.groupBy("qid", "cid").agg(F.max("sim").alias("sim"))
+    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("cid"))
+    return (local.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("qid", "cid", "sim", "rank"))
+
+
+def _empty_topk(spark) -> DataFrame:
+    """The empty ``(qid, cid, sim, rank)`` result of a top-k operator
+    with nothing to score."""
+    return spark.range(0).select(
+        F.col("id").alias("qid"), F.col("id").alias("cid"),
+        F.lit(0.0).alias("sim"), F.lit(0).alias("rank"))
 
 
 def pq_topk(corpus: DataFrame, queries: DataFrame, *,
@@ -1221,8 +1415,10 @@ def pq_topk(corpus: DataFrame, queries: DataFrame, *,
     codebooks are bit-reproducible run-to-run and
     partitioning-independent (the trainer's decimal-sum protocol),
     and swapping them changes only the tiny broadcast table, not the
-    plan. Approximate sim = Σ_sub ⟨q_sub, centroid[code]⟩ normalized
-    by the true norms (stored at encode time, 8 more bytes).
+    plan. Callers scoring several PQ variants over one corpus (the
+    q126 gate) train once and pass ``books``. Approximate sim =
+    Σ_sub ⟨q_sub, centroid[code]⟩ normalized by the true norms
+    (stored at encode time, 8 more bytes).
 
     Scale shape — the point of PQ at 100 TB: after one encode pass the
     working set is ~40 bytes/vector (codes + norm), so a billion-row
@@ -1231,241 +1427,69 @@ def pq_topk(corpus: DataFrame, queries: DataFrame, *,
     (codebooks, queries) and emits only its per-query local top-k, so
     the only shuffle is (queries × k × partitions) candidate rows into
     the final global top-k window. Compose with IVF cells for the full
-    IVF-PQ layout.
+    IVF-PQ layout. Scoring is :func:`_adc_topk`: a bounded query set
+    encodes and scores in one Python stage, a query set past
+    ``query_chunk`` encodes the corpus once and streams through
+    driver-bounded chunks — bit-identical output (tested).
 
-    Query-side scale (round-8, closing the r7 verdict's noted
-    trade-off): the query set is collected to the driver for the ADC
-    tables, which is fine for bounded probe workloads but not for
-    query sets in the millions (~65 GB of tables). Above
-    ``query_chunk`` queries the operator switches to
-    :func:`_pq_topk_chunked`: encode the corpus ONCE into the
-    codes+norm relation, then stream the query set through in
-    driver-bounded chunks (each chunk ≈ chunk·n_sub·n_cents·8 B of
-    tables) whose per-chunk candidates union into one global top-k —
-    bit-identical output, proven by the chunked==one-shot test.
-
-    Not SQL-expressible (argmin encode + table lookups) → rows-only
+    An empty or all-NULL corpus or query set returns no rows. Not
+    SQL-expressible (argmin encode + table lookups) → rows-only
     driver check; recall vs ``brute_force_topk`` is pinned by tests.
     """
-    import numpy as np
-
-    spark = corpus.sparkSession
-    # NULL vectors can neither be encoded nor probe (np.stack would
-    # reject them; update_ann_index filters for the same reason) —
-    # excluded up front on BOTH sides, so every kernel sees dense rows
+    # NULL vectors can neither be encoded nor probe (update_ann_index
+    # filters for the same reason) — excluded up front on BOTH sides
     corpus = corpus.filter(F.col(vec_col).isNotNull())
     queries = queries.filter(F.col(vec_col).isNotNull())
     if books is None:
-        # ``books`` injection (round-9): callers evaluating several
-        # PQ variants over ONE corpus (the q126 gate trains for both
-        # its pq and ivfpq method rows) train once via pq_train_books
-        # and pass the array through — identical results, half the
-        # training passes; swapping books changes only the broadcast
-        if train_iter > 0:
-            books = pq_train_books(corpus, id_col=id_col,
-                                   vec_col=vec_col, n_sub=n_sub,
-                                   n_cents=n_cents, n_iter=train_iter)
-        else:
-            books = _pq_books(corpus, id_col, vec_col, n_sub, n_cents)
+        books = pq_train_books(corpus, id_col=id_col, vec_col=vec_col,
+                               n_sub=n_sub, n_cents=n_cents,
+                               n_iter=train_iter)
+        if books is None:
+            return _empty_topk(corpus.sparkSession)
+    return _adc_topk(corpus, queries, books, id_col=id_col,
+                     vec_col=vec_col, k=k, query_chunk=query_chunk)
 
-    # one probe collect decides the path (no separate count job): if
-    # the limit returns more than query_chunk rows the set is large —
-    # discard the probe and stream chunks instead
-    qrows = queries.select(id_col, vec_col).limit(query_chunk + 1) \
-        .collect()
-    if len(qrows) > query_chunk:
-        return _pq_topk_chunked(corpus, queries, books,
-                                id_col=id_col, vec_col=vec_col, k=k,
-                                query_chunk=query_chunk)
-    qids, qnorms, tables = _pq_tables(qrows, books, id_col, vec_col)
-    bc = spark.sparkContext.broadcast((books, qids, qnorms, tables))
+
+def _encode_codes(df: DataFrame, books, id_col: str, vec_col: str,
+                  cmat=None) -> DataFrame:
+    """The encode pass behind :func:`pq_encode`: ``(id, norm, codes)``,
+    or with ``cmat`` ``(id, cell, norm, codes)`` whose codes quantize
+    each replica's residual x − cmat[cell]. The norm is always the raw
+    vector's."""
+    import numpy as np
+
+    bc = df.sparkSession.sparkContext.broadcast((books, cmat))
+    cell = [] if cmat is None else ["cell"]
 
     def kernel(batches):
         import pandas as pd
 
-        books_b, qids_b, qnorms_b, tables_b = bc.value
+        books_b, cmat_b = bc.value
         for pdf in batches:
             if not len(pdf):
                 continue
-            ids_b = pdf[id_col].to_numpy()
             mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            norms = np.sqrt((mat * mat).sum(axis=1))
-            subs = mat.reshape(len(mat), len(books_b), -1)
-            # encode: codes[i, s] = argmin_c ||subs[i,s] - books[s,c]||
-            codes = np.empty((len(mat), len(books_b)), dtype=np.int64)
-            for s in range(len(books_b)):
-                d2 = ((subs[:, s, None, :] - books_b[s][None, :, :]) ** 2
-                      ).sum(axis=2)
-                codes[:, s] = d2.argmin(axis=1)
-            # ADC: approx_dot[q, i] = Σ_s tables[q, s, codes[i, s]]
-            approx = np.zeros((len(qids_b), len(mat)))
-            for s in range(len(books_b)):
-                approx += tables_b[:, s, codes[:, s]]
-            sims = approx / (qnorms_b[:, None] * norms[None, :])
-            out_q, out_c, out_s = _pq_adc_emit(sims, qids_b, ids_b, k)
-            yield pd.DataFrame({"qid": out_q, "cid": out_c, "sim": out_s})
+            out = {id_col: pdf[id_col].to_numpy()}
+            enc = mat
+            if cmat_b is not None:
+                out["cell"] = pdf["cell"].to_numpy()
+                enc = mat - cmat_b[out["cell"]]
+            out["norm"] = np.sqrt((mat * mat).sum(axis=1))
+            out["codes"] = [c.tolist() for c in _pq_encode(enc, books_b)]
+            yield pd.DataFrame(out)
 
-    local = corpus.select(id_col, vec_col).mapInPandas(
-        kernel, "qid long, cid long, sim double")
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("cid"))
-    return (local.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "cid", "sim", "rank"))
+    return df.select(id_col, vec_col, *cell).mapInPandas(
+        kernel, f"{id_col} long, " + "cell int, " * len(cell)
+        + "norm double, codes array<int>")
 
 
 def pq_encode(corpus: DataFrame, books, *, id_col: str = "vec_id",
               vec_col: str = "embedding") -> DataFrame:
     """One encode pass: ``(id, norm, codes array<int>)`` — the
-    ~40-byte/vector working set PQ exists for. The argmin math is
-    the one-shot kernel's, verbatim; shared here so the chunked path
-    encodes ONCE instead of once per query chunk."""
-    import numpy as np
-
-    bc = corpus.sparkSession.sparkContext.broadcast(books)
-    corpus = corpus.filter(F.col(vec_col).isNotNull())  # np.stack
-    # rejects None rows; idempotent when the caller already filtered
-
-    def kernel(batches):
-        import pandas as pd
-
-        books_b = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            norms = np.sqrt((mat * mat).sum(axis=1))
-            subs = mat.reshape(len(mat), len(books_b), -1)
-            codes = np.empty((len(mat), len(books_b)), dtype=np.int64)
-            for s in range(len(books_b)):
-                d2 = ((subs[:, s, None, :] - books_b[s][None, :, :]) ** 2
-                      ).sum(axis=2)
-                codes[:, s] = d2.argmin(axis=1)
-            yield pd.DataFrame({
-                id_col: pdf[id_col].to_numpy(),
-                "norm": norms,
-                "codes": [c.tolist() for c in codes]})
-
-    return corpus.select(id_col, vec_col).mapInPandas(
-        kernel, f"{id_col} long, norm double, codes array<int>")
-
-
-def _pq_topk_chunked(corpus: DataFrame, queries: DataFrame, books, *,
-                     id_col: str, vec_col: str, k: int,
-                     query_chunk: int) -> DataFrame:
-    """PQ-ADC for UNBOUNDED query sets: the corpus is encoded once
-    (``pq_encode``, pinned — every chunk re-reads codes, never raw
-    vectors), the query set streams through in ``ceil(n_q / chunk)``
-    hash-sliced chunks (pmod of the id — deterministic, no ordering
-    or offset scan), and each chunk's driver-bounded ADC tables score
-    the codes relation for its local top-k. The union of per-chunk
-    candidates feeds the same global top-k window as the one-shot
-    path; chunks partition the query set, so each query's rows come
-    from exactly one chunk and the result is bit-identical (tested).
-
-    Driver memory is O(query_chunk · n_sub · n_cents) per chunk —
-    ~256 MiB at the defaults — regardless of |queries|; the corpus
-    side is the codes relation (~40 B/vector) scanned once per chunk,
-    the classic ADC cost model."""
-    codes_df = pq_encode(corpus, books, id_col=id_col,
-                         vec_col=vec_col).localCheckpoint()
-    return _adc_topk_codes(codes_df, queries, books, id_col=id_col,
-                           vec_col=vec_col, k=k,
-                           query_chunk=query_chunk)
-
-
-def _adc_topk_codes(codes_df: DataFrame, queries: DataFrame, books, *,
-                    id_col: str, vec_col: str, k: int,
-                    query_chunk: int) -> DataFrame:
-    """Chunked ADC top-k over an ALREADY-ENCODED codes relation
-    (``(id, norm, codes)``) — the scoring half of
-    :func:`_pq_topk_chunked`, shared with the landed PQ index
-    (``update_pq_index``) whose codes come from the ledger instead of
-    a fresh encode. The caller pins ``codes_df`` (localCheckpoint or
-    a parquet-backed ledger read); every chunk re-scans CODES, never
-    raw vectors.
-
-    Broadcast lifecycle (round-9, ADVICE r8): multi-chunk runs land
-    each chunk's candidates with their own eager action and
-    unpersist the chunk's ADC-table broadcast before building the
-    next, so LIVE broadcast footprint is O(query_chunk·n_sub·
-    n_cents·8 B) — one chunk — rather than the O(|queries|·n_sub·
-    n_cents) aggregate a single lazy union job would keep registered
-    across all chunks simultaneously (~65 GB at a million queries).
-    The landed candidates are ≤ k rows per (query, input partition),
-    never corpus-sized."""
-    import numpy as np
-
-    spark = codes_df.sparkSession
-    # pin the PROJECTED query relation once (the codes_df rule): the
-    # loop below scans it n_chunks+1 times, and without the pin each
-    # scan re-executes the queries DataFrame's entire upstream
-    # lineage — for the large query sets this path exists for, that
-    # redundant recomputation would dominate the wall clock
-    qproj = queries.select(id_col, vec_col).localCheckpoint()
-    n_q = qproj.count()
-    n_chunks = -(-n_q // query_chunk)
-
-    parts = []
-    for i in range(n_chunks):
-        # xxhash64 slice: deterministic, id-type-agnostic, and a
-        # PARTITION of the query set (each query scores in exactly
-        # one chunk — no cross-chunk dedup needed)
-        qrows = (qproj
-                 .filter(F.pmod(F.xxhash64(F.col(id_col)),
-                                F.lit(n_chunks)) == i)
-                 .collect())
-        if not qrows:
-            continue
-        qids, qnorms, tables = _pq_tables(qrows, books, id_col, vec_col)
-        bc = spark.sparkContext.broadcast((qids, qnorms, tables))
-
-        def kernel(batches, _bc=bc):
-            import pandas as pd
-
-            qids_b, qnorms_b, tables_b = _bc.value
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                ids_b = pdf[id_col].to_numpy()
-                norms = pdf["norm"].to_numpy()
-                codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-                approx = np.zeros((len(qids_b), len(ids_b)))
-                for s in range(tables_b.shape[1]):
-                    approx += tables_b[:, s, codes[:, s]]
-                sims = approx / (qnorms_b[:, None] * norms[None, :])
-                out_q, out_c, out_s = _pq_adc_emit(sims, qids_b, ids_b, k)
-                yield pd.DataFrame(
-                    {"qid": out_q, "cid": out_c, "sim": out_s})
-
-        part = codes_df.select(id_col, "norm", "codes") \
-            .mapInPandas(kernel, "qid long, cid long, sim double")
-        if n_chunks > 1:
-            # eager per-chunk land, then release this chunk's tables
-            part = part.localCheckpoint()
-            bc.unpersist()
-        parts.append(part)
-
-    if not parts:
-        return spark.range(0).select(
-            F.col("id").alias("qid"), F.col("id").alias("cid"),
-            F.lit(0.0).alias("sim"), F.lit(0).alias("rank")).limit(0)
-    local = parts[0]
-    for p in parts[1:]:
-        local = local.unionByName(p)
-    # (qid, cid) dedup before the global top-k (the _probe_score_topk
-    # rule, ledger edition): a vec_id landed in TWO batch directories
-    # (re-ingest under a new batch_id) yields two code rows, and
-    # without this its duplicate would occupy two rank slots and
-    # displace a real candidate. Per the ANN twin's contract the
-    # re-ingested embedding is identical, so both rows carry the same
-    # codes and max(sim) is the identity — deterministic either way.
-    # The relation is ≤ k rows per (query, input partition), never
-    # corpus-sized.
-    local = local.groupBy("qid", "cid").agg(F.max("sim").alias("sim"))
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("cid"))
-    return (local.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "cid", "sim", "rank"))
+    ~40-byte/vector working set PQ exists for, encoded by
+    :func:`_pq_encode`. NULL vectors are skipped."""
+    return _encode_codes(corpus.filter(F.col(vec_col).isNotNull()),
+                         books, id_col, vec_col)
 
 
 def ivfpq_topk(corpus: DataFrame, queries: DataFrame, *,
@@ -1485,43 +1509,42 @@ def ivfpq_topk(corpus: DataFrame, queries: DataFrame, *,
     and never again.
 
     Composition of the two operators already under the q126 gate:
-    the coarse quantizer is ``_ivf_centroids`` (salt "ipq:" — its own
-    namespace, so this index never aliases q42's), corpus vectors are
-    soft-assigned to their ``n_assign`` nearest cells and PQ-encoded
-    ONCE (``pq_encode``, the codes join their cell assignments — one
-    hash join of two corpus-thin relations, cheaper at scale than
-    encoding each replica); queries probe ``n_probe`` cells through
-    the SAME ``_nearest_cells`` kernel and score only rows whose cell
-    is probed. The default is the plain variant with Lloyd-TRAINED
-    codebooks (``train_iter=PQ_TRAIN_ITER`` — the round-8 retune:
-    recall@5 .856/.896 at sf0.001/0.01 on 25 queries vs .808/.832
-    sampled, q126-gate floor lifted 0.70→0.80; the codes quantize
-    the raw vectors, the cell only prunes).
+    the coarse quantizer is ``_ivf_centroid_rows`` (salt "ipq:" — its
+    own namespace, so this index never aliases q42's), corpus vectors
+    are soft-assigned to their ``n_assign`` nearest cells and
+    PQ-encoded ONCE (``pq_encode``, the codes join their cell
+    assignments — one hash join of two corpus-thin relations, cheaper
+    at scale than encoding each replica); queries probe ``n_probe``
+    cells and score only rows whose cell is probed, through the one
+    ADC engine :func:`_adc_topk`. The default is the plain variant
+    with Lloyd-TRAINED codebooks (``train_iter=PQ_TRAIN_ITER`` — the
+    round-8 retune: recall@5 .856/.896 at sf0.001/0.01 on 25 queries
+    vs .808/.832 sampled, q126-gate floor lifted 0.70→0.80; the codes
+    quantize the raw vectors, the cell only prunes).
     ``residual=True`` is the classical IVFADC refinement (Jégou et
     al. §V.A): each replica encodes its residual x − centroid[cell]
-    against residual codebooks and the ADC score restores the exact
-    ⟨q, centroid⟩ term. HONEST MEASUREMENT (the
-    lloyd-vs-hash-centroids discipline): residual stays behind plain
-    on every fixture tried — sampled books: plain 1.00 vs residual
-    0.38 recall@3 on the 4-cluster corpus; trained books close most
-    of the gap on real embeddings (.80/.872 vs plain's .856/.896)
-    but on the clustered fixture training correctly averages the
-    noise-only residuals to zero and every candidate ties (0.08) —
-    so plain remains the default. Kept because the plumbing differs
-    structurally (per-replica codes — n_assign× the encode and
-    landed codes — and max-sim replica dedup, the FAISS rule) and
-    ``train_iter``/``books_r`` swap only the tiny broadcast tables,
-    not this plan.
+    against residual codebooks (``pq_train_books(coarse=…)``; the
+    ``books`` argument applies to the plain variant only) and the ADC
+    score restores the exact ⟨q, centroid⟩ term. HONEST MEASUREMENT
+    (the lloyd-vs-hash-centroids discipline): residual stays behind
+    plain on every fixture tried — sampled books: plain 1.00 vs
+    residual 0.38 recall@3 on the 4-cluster corpus; trained books
+    close most of the gap on real embeddings (.80/.872 vs plain's
+    .856/.896) but on the clustered fixture training correctly
+    averages the noise-only residuals to zero and every candidate
+    ties (0.08) — so plain remains the default. A pair's replicas
+    score differently under residual codes; the engine keeps the
+    max-sim replica (the FAISS rule).
 
     Scale shape at 100 TB: candidate work is
     ~n_assign·n_probe/n_cells of the CODES relation (not the raw
     vectors), each partition emits only per-query local top-k, the
     single shuffle is (queries × k × partitions) candidate rows into
-    the global top-k window. A pair probed via both of its assigned
-    cells is deduped inside the kernel before ranking.
+    the global top-k window.
 
-    Not SQL-expressible (argmin encode + table lookups) → the q134
-    oracle is a margin-checked numpy ground-truth replay
+    An empty or all-NULL corpus or query set returns no rows. Not
+    SQL-expressible (argmin encode + table lookups) → the q134 oracle
+    is a margin-checked numpy ground-truth replay
     (plans/groundtruth.ivfpq_topk_truth, the q73 discipline).
     """
     # NULL vectors: same exclusion as pq_topk/update_ann_index (they
@@ -1530,352 +1553,29 @@ def ivfpq_topk(corpus: DataFrame, queries: DataFrame, *,
     queries = queries.filter(F.col(vec_col).isNotNull())
     cents = _ivf_centroid_rows(corpus, id_col, vec_col, n_cells,
                                salt="ipq:")
+    if not cents:
+        return _empty_topk(corpus.sparkSession)
     if residual:
-        books_r = (pq_train_books(
+        books = pq_train_books(
             corpus, id_col=id_col, vec_col=vec_col, n_sub=n_sub,
             n_cents=n_cents, n_iter=train_iter, coarse=cents,
-            n_assign=n_assign) if train_iter > 0 else None)
-        return _ivfpq_residual(corpus, queries, cents, id_col=id_col,
-                               vec_col=vec_col, k=k, n_probe=n_probe,
-                               n_assign=n_assign, n_sub=n_sub,
-                               n_cents=n_cents, books_r=books_r,
-                               query_chunk=query_chunk)
-    if books is None:
-        if train_iter > 0:
+            n_assign=n_assign)
+        replicas = _nearest_cells(corpus, cents, id_col, vec_col,
+                                  n_assign)
+        indexed = _encode_codes(replicas, books, id_col, vec_col,
+                                cmat=_cent_matrix(cents)[1])
+    else:
+        if books is None:
             books = pq_train_books(corpus, id_col=id_col,
                                    vec_col=vec_col, n_sub=n_sub,
                                    n_cents=n_cents, n_iter=train_iter)
-        else:
-            books = _pq_books(corpus, id_col, vec_col, n_sub, n_cents)
-
-    # encode once; join the soft cell assignments onto the codes
-    codes_df = pq_encode(corpus, books, id_col=id_col, vec_col=vec_col)
-    acells = _nearest_cells(corpus, cents, id_col, vec_col, n_assign) \
-        .select(id_col, "cell")
-    indexed = codes_df.join(acells, id_col)
-
-    return _ivfpq_adc_topk(indexed, queries, cents, books,
-                           id_col=id_col, vec_col=vec_col, k=k,
-                           n_probe=n_probe, query_chunk=query_chunk)
-
-
-def _ivfpq_adc_topk(indexed: DataFrame, queries: DataFrame,
-                    cents, books, *, id_col: str,
-                    vec_col: str, k: int, n_probe: int,
-                    query_chunk: int) -> DataFrame:
-    """IVF-pruned chunked ADC top-k over an ALREADY-INDEXED relation
-    ``(id, norm, codes, cell)`` — the scoring half of
-    :func:`ivfpq_topk`, shared with the landed IVF-PQ index
-    (``update_ivfpq_index``) whose codes+cells come from the ledger
-    instead of a fresh encode+assign.
-
-    Bounded probe contract (the pq_topk rule, round-8 chunk switch
-    included): small query sets collect once for the ADC tables;
-    past ``query_chunk`` queries the set streams through in
-    xxhash64-sliced driver-bounded chunks — the same partition-of-
-    queries scheme as _pq_topk_chunked, with each chunk's probe
-    cells computed by the SAME _nearest_cells kernel the corpus
-    side used so ranking parity is exact. Every chunk scans the
-    PINNED indexed relation, never raw vectors; each chunk's input
-    is pre-filtered to the UNION of the chunk's probed cells, so a
-    parquet ledger partitioned by cell prunes to the touched
-    directories at scan time (the IVF scale contract).
-
-    Broadcast lifecycle (round-9, ADVICE r8): each chunk's ADC
-    tables are ~chunk·n_sub·n_cents·8 B of broadcast; a lazy union
-    of all chunks into one job would keep EVERY chunk's blocks
-    registered simultaneously (~65 GB at a million queries). Chunked
-    runs therefore land each chunk's candidates with their own
-    eager action and unpersist the chunk broadcast before the next,
-    so live broadcast footprint is O(one chunk) — the candidates
-    are ≤ k rows per (query, input partition), never corpus-sized.
-    """
-    import numpy as np
-
-    spark = indexed.sparkSession
-
-    def make_kernel(bc):
-        def kernel(batches):
-            import pandas as pd
-
-            qids_b, qnorms_b, tables_b, probes_b = bc.value
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                ids_b = pdf[id_col].to_numpy()
-                norms_b = pdf["norm"].to_numpy()
-                cells_b = pdf["cell"].to_numpy()
-                codes_b = np.stack(pdf["codes"].to_numpy()) \
-                    .astype(np.int64)
-                out_q, out_c, out_s = [], [], []
-                for qi, qid in enumerate(qids_b):
-                    pc = probes_b.get(qid)
-                    if not pc:
-                        continue
-                    sel = np.isin(cells_b, pc) & (ids_b != qid)
-                    if not sel.any():
-                        continue
-                    ids_s = ids_b[sel]
-                    # a cid assigned to two probed cells appears twice
-                    # with an IDENTICAL sim — dedup BEFORE ranking
-                    ids_s, first = np.unique(ids_s, return_index=True)
-                    codes_s = codes_b[sel][first]
-                    norms_s = norms_b[sel][first]
-                    approx = np.zeros(len(ids_s))
-                    for s in range(tables_b.shape[1]):
-                        approx += tables_b[qi, s, codes_s[:, s]]
-                    sims = approx / (qnorms_b[qi] * norms_s)
-                    order = np.lexsort((ids_s, -sims))[:k]
-                    out_q.extend([int(qid)] * len(order))
-                    out_c.extend(int(x) for x in ids_s[order])
-                    out_s.extend(float(np.floor(sims[j] * 1e6) / 1e6)
-                                 for j in order)
-                yield pd.DataFrame(
-                    {"qid": out_q, "cid": out_c, "sim": out_s})
-        return kernel
-
-    qproj = queries.select(id_col, vec_col)
-    head = qproj.limit(query_chunk + 1).collect()
-    if len(head) <= query_chunk:
-        chunks = [(head, queries)]
-        indexed_src = indexed
-        chunked = False
-    else:
-        qpin = qproj.localCheckpoint()
-        n_chunks = -(-qpin.count() // query_chunk)
-        indexed_src = indexed.localCheckpoint()
-        chunks = [(None, qpin.filter(
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_chunks)) == i))
-            for i in range(n_chunks)]
-        chunked = True
-
-    # n_cells rows — collected ONCE for every chunk's driver-side
-    # probe assignment (round-9: the per-chunk distributed
-    # _nearest_cells job over an already-collected, driver-bounded
-    # query chunk was a pure round trip — _rank_cells is the same
-    # fold code the distributed kernel runs, so values cannot drift).
-    # A caller that already holds the rows (tiny_parquet_rows read of
-    # the landed centroid relation, or the hash-sampled pick) skips
-    # the collect job entirely.
-    cent_rows = _cent_rows(cents)
-    parts = []
-    for qrows, qdf in chunks:
-        if qrows is None:
-            qrows = qdf.select(id_col, vec_col).collect()
-        if not qrows:
-            continue
-        qids, qnorms, tables = _pq_tables(qrows, books, id_col, vec_col)
-        ranked_cells = _rank_cells([r[vec_col] for r in qrows],
-                                   cent_rows, n_probe)
-        probes = {r[id_col]: pc
-                  for r, pc in zip(qrows, ranked_cells)}
-        # partition pruning: only the union of this chunk's probed
-        # cells can contribute candidates — on a cell-partitioned
-        # ledger this becomes directory pruning at the parquet scan
-        cells_union = sorted({c for pc in probes.values() for c in pc})
-        src = indexed_src.filter(F.col("cell").isin(cells_union))
-        bc = spark.sparkContext.broadcast((qids, qnorms, tables, probes))
-        part = src.mapInPandas(make_kernel(bc),
-                               "qid long, cid long, sim double")
-        if chunked:
-            # eager per-chunk land, then release this chunk's tables
-            part = part.localCheckpoint()
-            bc.unpersist()
-        parts.append(part)
-
-    if not parts:
-        return spark.range(0).select(
-            F.col("id").alias("qid"), F.col("id").alias("cid"),
-            F.lit(0.0).alias("sim"), F.lit(0).alias("rank")).limit(0)
-    local = parts[0]
-    for p in parts[1:]:
-        local = local.unionByName(p)
-    # the kernel's np.unique dedups replicas only WITHIN one Arrow
-    # batch; a cid whose n_assign replicas straddle batch/partition
-    # boundaries emits twice (identical sim — plain ADC scores depend
-    # only on the codes) and would occupy two rank slots, displacing
-    # a real candidate. Dedup once more ACROSS partitions before the
-    # global top-k (the residual path's groupBy-max rule; max of
-    # identical sims is the identity) — the relation is ≤ k rows per
-    # (query, input batch), never corpus-sized.
-    local = local.groupBy("qid", "cid").agg(F.max("sim").alias("sim"))
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("cid"))
-    return (local.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "cid", "sim", "rank"))
-
-
-def _ivfpq_residual(corpus: DataFrame, queries: DataFrame,
-                    cents, *, id_col: str, vec_col: str,
-                    k: int, n_probe: int, n_assign: int, n_sub: int,
-                    n_cents: int, books_r=None,
-                    query_chunk: int = PQ_QUERY_CHUNK) -> DataFrame:
-    """The residual (IVFADC) scoring path of :func:`ivfpq_topk` —
-    see its docstring for the math and the trade. Codes quantize
-    x − centroid[cell] per replica against residual codebooks
-    (``books_r``; defaults to the deterministic sampled pick of
-    :func:`_residual_seed_books`, or pass Lloyd-trained books from
-    :func:`pq_train_books`); the ADC score restores the exact
-    ⟨q, centroid⟩ term. A pair's two replicas score differently, so
-    dedup keeps the MAX sim — inside the kernel per partition, then
-    once more across partitions (groupBy max before the global top-k
-    window).
-
-    Query sets past ``query_chunk`` stream through in xxhash64-sliced
-    driver-bounded chunks with the per-chunk eager-land + broadcast
-    unpersist lifecycle — the _ivfpq_adc_topk contract, applied here
-    round-9 (the r8 verdict flagged this path as the one remaining
-    unchunked query collect)."""
-    import numpy as np
-
-    spark = corpus.sparkSession
-    cent_rows = sorted(_cent_rows(cents), key=lambda r: r["cell"])
-    cmat = np.stack([np.asarray(r["cvec_cent"], dtype=np.float64)
-                     for r in cent_rows])
-    if books_r is None:
-        books_r = _residual_seed_books(corpus, cmat, id_col, vec_col,
-                                       n_sub, n_cents)
-
-    # per-replica residual encode over the exploded assignment
-    replicas = _nearest_cells(corpus, cent_rows, id_col, vec_col,
-                              n_assign)
-    bc_enc = spark.sparkContext.broadcast((cmat, books_r))
-
-    def enc(batches):
-        import pandas as pd
-
-        cmat_b, books_b = bc_enc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            cells = pdf["cell"].to_numpy()
-            norms = np.sqrt((mat * mat).sum(axis=1))
-            resid = mat - cmat_b[cells]
-            subs = resid.reshape(len(mat), len(books_b), -1)
-            codes = np.empty((len(mat), len(books_b)), dtype=np.int64)
-            for s in range(len(books_b)):
-                d2 = ((subs[:, s, None, :] - books_b[s][None, :, :]) ** 2
-                      ).sum(axis=2)
-                codes[:, s] = d2.argmin(axis=1)
-            yield pd.DataFrame({
-                id_col: pdf[id_col].to_numpy(), "cell": cells,
-                "norm": norms, "codes": [c.tolist() for c in codes]})
-
-    indexed = replicas.select(id_col, vec_col, "cell").mapInPandas(
-        enc, f"{id_col} long, cell int, norm double, codes array<int>")
-
-    def make_kernel(bc):
-        def kernel(batches):
-            import pandas as pd
-
-            qids_b, qnorms_b, tables_b, probes_b, qdotc_b = bc.value
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                ids_b = pdf[id_col].to_numpy()
-                norms_b = pdf["norm"].to_numpy()
-                cells_b = pdf["cell"].to_numpy()
-                codes_b = np.stack(pdf["codes"].to_numpy()) \
-                    .astype(np.int64)
-                out_q, out_c, out_s = [], [], []
-                for qi, qid in enumerate(qids_b):
-                    pc = probes_b.get(qid)
-                    if not pc:
-                        continue
-                    sel = np.isin(cells_b, pc) & (ids_b != qid)
-                    if not sel.any():
-                        continue
-                    ids_s = ids_b[sel]
-                    cells_s = cells_b[sel]
-                    codes_s = codes_b[sel]
-                    norms_s = norms_b[sel]
-                    base = np.array([qdotc_b[(qid, c)]
-                                     for c in cells_s])
-                    approx = base.copy()
-                    for s in range(tables_b.shape[1]):
-                        approx += tables_b[qi, s, codes_s[:, s]]
-                    sims = approx / (qnorms_b[qi] * norms_s)
-                    # max-per-id dedup: sort by (-sim, id), keep each
-                    # id's first (= best) replica
-                    srt = np.lexsort((ids_s, -sims))
-                    ids_sorted = ids_s[srt]
-                    _, first = np.unique(ids_sorted, return_index=True)
-                    keep = srt[np.sort(first)]
-                    ids_k, sims_k = ids_s[keep], sims[keep]
-                    order = np.lexsort((ids_k, -sims_k))[:k]
-                    out_q.extend([int(qid)] * len(order))
-                    out_c.extend(int(x) for x in ids_k[order])
-                    out_s.extend(float(np.floor(sims_k[j] * 1e6) / 1e6)
-                                 for j in order)
-                yield pd.DataFrame(
-                    {"qid": out_q, "cid": out_c, "sim": out_s})
-        return kernel
-
-    qproj = queries.select(id_col, vec_col)
-    head = qproj.limit(query_chunk + 1).collect()
-    if len(head) <= query_chunk:
-        chunks = [(head, queries)]
-        indexed_src = indexed
-        chunked = False
-    else:
-        qpin = qproj.localCheckpoint()
-        n_chunks = -(-qpin.count() // query_chunk)
-        indexed_src = indexed.localCheckpoint()
-        chunks = [(None, qpin.filter(
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_chunks)) == i))
-            for i in range(n_chunks)]
-        chunked = True
-
-    parts = []
-    for qrows, qdf in chunks:
-        if qrows is None:
-            qrows = qdf.select(id_col, vec_col).collect()
-        if not qrows:
-            continue
-        qids, qnorms, tables = _pq_tables(qrows, books_r, id_col,
-                                          vec_col)
-        probe_rows = _nearest_cells(qdf, cent_rows, id_col, vec_col,
-                                    n_probe).select(id_col,
-                                                    "cell").collect()
-        probes: dict = {}
-        for r in probe_rows:
-            probes.setdefault(r[id_col], []).append(r["cell"])
-        # exact <q, centroid> per (query, probed cell) — chunk ×
-        # n_probe scalars, driver-tiny
-        qdotc = {}
-        for r in qrows:
-            v = np.asarray(r[vec_col], dtype=np.float64)
-            for c in probes.get(r[id_col], []):
-                qdotc[(r[id_col], c)] = float(np.cumsum(v * cmat[c])[-1])
-        # probed-cell union pre-filter (the _ivfpq_adc_topk pruning
-        # rule): only these cells can contribute candidates
-        cells_union = sorted({c for pc in probes.values() for c in pc})
-        src = indexed_src.filter(F.col("cell").isin(cells_union))
-        bc = spark.sparkContext.broadcast((qids, qnorms, tables, probes,
-                                           qdotc))
-        part = src.mapInPandas(make_kernel(bc),
-                               "qid long, cid long, sim double")
-        if chunked:
-            # eager per-chunk land, then release this chunk's tables
-            part = part.localCheckpoint()
-            bc.unpersist()
-        parts.append(part)
-
-    if not parts:
-        return spark.range(0).select(
-            F.col("id").alias("qid"), F.col("id").alias("cid"),
-            F.lit(0.0).alias("sim"), F.lit(0).alias("rank")).limit(0)
-    local = parts[0]
-    for p in parts[1:]:
-        local = local.unionByName(p)
-    # cross-partition replica dedup: the same pair can surface from
-    # two partitions with different per-replica sims — keep the max
-    best = local.groupBy("qid", "cid").agg(F.max("sim").alias("sim"))
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("cid"))
-    return (best.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "cid", "sim", "rank"))
+        acells = _nearest_cells(corpus, cents, id_col, vec_col,
+                                n_assign).select(id_col, "cell")
+        indexed = pq_encode(corpus, books, id_col=id_col,
+                            vec_col=vec_col).join(acells, id_col)
+    return _adc_topk(indexed, queries, books, id_col=id_col,
+                     vec_col=vec_col, k=k, query_chunk=query_chunk,
+                     cents=cents, n_probe=n_probe, residual=residual)
 
 
 def _knn_accuracy(preds: DataFrame) -> DataFrame:
@@ -1988,6 +1688,44 @@ def knn_classify_bucketed(emb: DataFrame, *, id_col: str = "vec_id",
     return _knn_accuracy(base.join(preds, "qid", "left"))
 
 
+def _guarded_fetch(df: DataFrame, cols: list, *, id_col: str,
+                   method: str, max_broadcast_rows: int,
+                   approx_rows: int | None):
+    """The broadcast guard of the exact all-pairs kernels
+    (``knn_classify``, ``cosine_near_dup_pairs``): ``df[cols]`` as one
+    pandas frame when the exact path applies, None when the caller
+    must route to its bucketed twin. ``method="exact"`` past the guard
+    raises instead.
+
+    An over-guard ``approx_rows`` hint routes with no job; an
+    under-guard hint goes straight to the fetch. Without a hint an
+    ids-only ``limit(guard+1).count()`` — column-pruned, bounded,
+    O(1) driver memory — decides first, so an over-guard corpus never
+    stages its vectors on the driver just to route away. The fetch is
+    re-checked for length in case the corpus grew between the jobs or
+    the hint was wrong."""
+    if method not in ("auto", "exact", "bucketed"):
+        raise ValueError(f"unknown method {method!r}")
+
+    def over():
+        if method == "auto":
+            return None
+        raise ValueError(
+            f">{max_broadcast_rows} vectors exceed the broadcast guard; "
+            "use method='bucketed'")
+
+    if method == "bucketed":
+        return None
+    if approx_rows is None:
+        n = df.select(id_col).limit(max_broadcast_rows + 1).count()
+        if n > max_broadcast_rows:
+            return over()
+    elif approx_rows > max_broadcast_rows:
+        return over()
+    fetched = df.select(*cols).limit(max_broadcast_rows + 1).toPandas()
+    return over() if len(fetched) > max_broadcast_rows else fetched
+
+
 def knn_classify(emb: DataFrame, *, id_col: str = "vec_id",
                  vec_col: str = "embedding", label_col: str = "label",
                  k: int = 10,
@@ -2010,16 +1748,10 @@ def knn_classify(emb: DataFrame, *, id_col: str = "vec_id",
     Beyond the broadcast guard the exact kernel stops being the right
     operator, so ``method="auto"`` (default) routes to
     ``knn_classify_bucketed`` — IVF cells, cogrouped per-cell kernel —
-    instead of raising. The size guard probes ids-only through
-    ``limit(guard+1).count()`` — a column-pruned, limit-bounded job
-    with O(1) driver memory, unlike the round-2 full ``count()`` that
-    doubled q72's wall time, and unlike a guard-sized full-vector
-    ``toPandas()`` that would stage multi-GB on the driver just to
-    discard it when routing to the bucketed path. Vectors transfer
-    only once the exact path is confirmed (with a post-fetch length
-    re-check in case the corpus grew between the two jobs). Callers
-    who already know the corpus scale pass ``approx_rows`` (e.g. from
-    catalog stats) to route with no job at all.
+    instead of raising; :func:`_guarded_fetch` decides, fetching the
+    vectors only once the exact path is confirmed. Callers who already
+    know the corpus scale pass ``approx_rows`` (e.g. from catalog
+    stats) to route with no job at all.
     ``method="exact"``/``"bucketed"`` force a path.
 
     Returns one row per label: n, n_correct, accuracy_micro
@@ -2030,42 +1762,14 @@ def knn_classify(emb: DataFrame, *, id_col: str = "vec_id",
     """
     import numpy as np
 
-    if method not in ("auto", "exact", "bucketed"):
-        raise ValueError(f"unknown method {method!r}")
-    over_hint = approx_rows is not None and approx_rows > max_broadcast_rows
-    if method == "bucketed" or (method == "auto" and over_hint):
+    corpus = _guarded_fetch(emb, [id_col, vec_col, label_col],
+                            id_col=id_col, method=method,
+                            max_broadcast_rows=max_broadcast_rows,
+                            approx_rows=approx_rows)
+    if corpus is None:
         return knn_classify_bucketed(
             emb, id_col=id_col, vec_col=vec_col, label_col=label_col, k=k)
-    if over_hint:
-        raise ValueError(
-            f">{max_broadcast_rows} vectors exceed the broadcast guard; "
-            "use method='bucketed'")
-
     spark = emb.sparkSession
-    # an under-guard hint already routed us exact — honor the
-    # docstring's "no probe job with a hint" promise and go straight
-    # to the fetch (the post-fetch length re-check below still guards
-    # a wrong hint)
-    if approx_rows is None:
-        n_probe = emb.select(id_col).limit(max_broadcast_rows + 1).count()
-        if n_probe > max_broadcast_rows:
-            if method == "auto":
-                return knn_classify_bucketed(
-                    emb, id_col=id_col, vec_col=vec_col,
-                    label_col=label_col, k=k)
-            raise ValueError(
-                f">{max_broadcast_rows} vectors exceed the broadcast "
-                "guard; use method='bucketed'")
-    corpus = (emb.select(id_col, vec_col, label_col)
-              .limit(max_broadcast_rows + 1).toPandas())
-    if len(corpus) > max_broadcast_rows:
-        if method == "auto":
-            return knn_classify_bucketed(
-                emb, id_col=id_col, vec_col=vec_col, label_col=label_col,
-                k=k)
-        raise ValueError(
-            f">{max_broadcast_rows} vectors exceed the broadcast guard; "
-            "use method='bucketed'")
     ids = corpus[id_col].to_numpy()
     labels = corpus[label_col].to_numpy()
     mat = np.stack(corpus[vec_col].to_numpy()).astype(np.float64)
@@ -2307,54 +2011,23 @@ def cosine_near_dup_pairs(df: DataFrame, *, id_col: str = "vec_id",
     Beyond ``max_broadcast_rows`` exact all-pairs stops being the
     right operator, so ``method="auto"`` (default) routes to
     ``cosine_near_dup_pairs_bucketed`` — banded LSH buckets, exact
-    kernel per bucket — instead of raising. The size guard probes
-    ids-only (``limit(guard+1).count()`` — column-pruned, bounded,
-    O(1) driver memory); vectors transfer only once the exact path is
-    confirmed, so an over-guard corpus never stages GBs on the driver
-    just to route away (a post-fetch length re-check covers growth
-    between the two jobs). Callers with catalog knowledge pass
-    ``approx_rows`` to route jobless. ``method="exact"``/
-    ``"bucketed"`` force a path (exact past the guard raises,
-    preserving the old contract).
+    kernel per bucket — instead of raising; :func:`_guarded_fetch`
+    decides, fetching the vectors only once the exact path is
+    confirmed. Callers with catalog knowledge pass ``approx_rows`` to
+    route jobless. ``method="exact"``/``"bucketed"`` force a path
+    (exact past the guard raises).
     """
     import numpy as np
 
-    if method not in ("auto", "exact", "bucketed"):
-        raise ValueError(f"unknown method {method!r}")
-    over_hint = approx_rows is not None and approx_rows > max_broadcast_rows
-    if method == "bucketed" or (method == "auto" and over_hint):
+    corpus = _guarded_fetch(df, [id_col, vec_col], id_col=id_col,
+                            method=method,
+                            max_broadcast_rows=max_broadcast_rows,
+                            approx_rows=approx_rows)
+    if corpus is None:
         return cosine_near_dup_pairs_bucketed(
             df, id_col=id_col, vec_col=vec_col, threshold=threshold,
             n_tables=n_tables, planes_per_table=planes_per_table)
-    if over_hint:
-        raise ValueError(
-            f">{max_broadcast_rows} vectors exceed the broadcast guard; "
-            "use method='bucketed'")
-
     spark = df.sparkSession
-    # under-guard hint → no probe job (post-fetch re-check still
-    # guards a wrong hint)
-    if approx_rows is None:
-        n_probe = df.select(id_col).limit(max_broadcast_rows + 1).count()
-        if n_probe > max_broadcast_rows:
-            if method == "auto":
-                return cosine_near_dup_pairs_bucketed(
-                    df, id_col=id_col, vec_col=vec_col,
-                    threshold=threshold, n_tables=n_tables,
-                    planes_per_table=planes_per_table)
-            raise ValueError(
-                f">{max_broadcast_rows} vectors exceed the broadcast "
-                "guard; use method='bucketed'")
-    corpus = (df.select(id_col, vec_col)
-              .limit(max_broadcast_rows + 1).toPandas())
-    if len(corpus) > max_broadcast_rows:
-        if method == "auto":
-            return cosine_near_dup_pairs_bucketed(
-                df, id_col=id_col, vec_col=vec_col, threshold=threshold,
-                n_tables=n_tables, planes_per_table=planes_per_table)
-        raise ValueError(
-            f">{max_broadcast_rows} vectors exceed the broadcast guard; "
-            "use method='bucketed'")
     ids = corpus[id_col].to_numpy()
     mat = np.stack(corpus[vec_col].to_numpy()).astype(np.float64)
     norms = np.sqrt((mat * mat).sum(axis=1))
@@ -2438,9 +2111,7 @@ def update_ann_index(spark, batch: DataFrame, index_path: str, *,
     if batch.isEmpty():
         # nothing to index OR the quantizer must not be trained on
         # nothing — either way the batch contributes no rows/neighbors
-        return batch.select(
-            F.col(id_col).alias("qid"), F.col(id_col).alias("cid"),
-            F.lit(0.0).alias("sim"), F.lit(0).alias("rank")).limit(0)
+        return _empty_topk(spark)
     # Existence-checked, not try/except-everything: a transient read
     # failure on an EXISTING quantizer must surface, never silently
     # retrain and overwrite the frozen centroids (which would orphan
@@ -2618,9 +2289,7 @@ def probe_ann_index(spark, queries: DataFrame, index_path: str, *,
 
     live = read_live_index(spark, cells_path)
     if live is None:
-        return spark.range(0).select(
-            F.col("id").alias("qid"), F.col("id").alias("cid"),
-            F.lit(0.0).alias("sim"), F.lit(0).alias("rank")).limit(0)
+        return _empty_topk(spark)
     probed = _nearest_cells(queries, cents, id_col, vec_col,
                             n_probe).select(
         F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec"),
@@ -2743,8 +2412,8 @@ def update_pq_index(spark, batch: DataFrame, index_path: str, *,
     ``bucket`` is xxhash64(id) % PQ_INDEX_BUCKETS, pure parallelism
     (plain ADC has no pruning key). Returns (qid, cid, sim, rank):
     the new batch vs everything ingested so far, self excluded,
-    scored by the chunked ADC engine (driver-bounded however large
-    the increment is)."""
+    scored by the one ADC engine (:func:`_adc_topk`, driver-bounded
+    however large the increment is)."""
     import os
     import uuid
 
@@ -2755,9 +2424,7 @@ def update_pq_index(spark, batch: DataFrame, index_path: str, *,
     if batch.isEmpty():
         # nothing to index OR books must not be trained on nothing
         # (the update_ann_index empty-first-batch rule)
-        return batch.select(
-            F.col(id_col).alias("qid"), F.col(id_col).alias("cid"),
-            F.lit(0.0).alias("sim"), F.lit(0).alias("rank")).limit(0)
+        return _empty_topk(spark)
     fs, jvm_books = _fs(spark, books_path)
     jvm_geom = _jp(spark, geom_path)
     if fs.exists(jvm_books):
@@ -2780,12 +2447,9 @@ def update_pq_index(spark, batch: DataFrame, index_path: str, *,
                 "geometries — rebuild instead")
         books = _read_landed_books(spark, books_path, n_sub)
     else:
-        if train_iter > 0:
-            books = pq_train_books(batch, id_col=id_col,
-                                   vec_col=vec_col, n_sub=n_sub,
-                                   n_cents=n_cents, n_iter=train_iter)
-        else:
-            books = _pq_books(batch, id_col, vec_col, n_sub, n_cents)
+        books = pq_train_books(batch, id_col=id_col, vec_col=vec_col,
+                               n_sub=n_sub, n_cents=n_cents,
+                               n_iter=train_iter)
         from ..catalog import literal_df
         _write_landed_books(spark, books, books_path)
         literal_df(spark,
@@ -2818,9 +2482,8 @@ def update_pq_index(spark, batch: DataFrame, index_path: str, *,
     tomb_ids = _live_tomb_ids(spark, index_path, id_col)
     if tomb_ids is not None:
         codes_live = codes_live.join(tomb_ids, id_col, "left_anti")
-    return _adc_topk_codes(codes_live, batch, books, id_col=id_col,
-                           vec_col=vec_col, k=k,
-                           query_chunk=query_chunk)
+    return _adc_topk(codes_live, batch, books, id_col=id_col,
+                     vec_col=vec_col, k=k, query_chunk=query_chunk)
 
 
 def compact_pq_index(spark, index_path: str, *,
@@ -2869,8 +2532,8 @@ def probe_pq_index(spark, queries: DataFrame, index_path: str, *,
     books on a query workload); geometry (n_sub) comes from the
     stamp, not the caller. Queries need not be in the index; a query
     id that IS indexed keeps the self-excluded contract. Returns
-    (qid, cid, sim, rank) via the chunked ADC engine — driver-bounded
-    however large the query set is."""
+    (qid, cid, sim, rank) via the one ADC engine (:func:`_adc_topk`) —
+    driver-bounded however large the query set is."""
     import os
 
     books_path = os.path.join(index_path, "books")
@@ -2889,17 +2552,14 @@ def probe_pq_index(spark, queries: DataFrame, index_path: str, *,
 
     live = read_live_index(spark, codes_path)
     if live is None:
-        return spark.range(0).select(
-            F.col("id").alias("qid"), F.col("id").alias("cid"),
-            F.lit(0.0).alias("sim"), F.lit(0).alias("rank")).limit(0)
+        return _empty_topk(spark)
     codes_live = live.drop("batch_id", "bucket")
     # live tombstones: identical deletion semantics to the ingest path
     tomb_ids = _live_tomb_ids(spark, index_path, id_col)
     if tomb_ids is not None:
         codes_live = codes_live.join(tomb_ids, id_col, "left_anti")
-    return _adc_topk_codes(codes_live, queries,
-                           books, id_col=id_col, vec_col=vec_col,
-                           k=k, query_chunk=query_chunk)
+    return _adc_topk(codes_live, queries, books, id_col=id_col,
+                     vec_col=vec_col, k=k, query_chunk=query_chunk)
 
 
 def probe_ivfpq_index(spark, queries: DataFrame, index_path: str, *,
@@ -2936,13 +2596,10 @@ def probe_ivfpq_index(spark, queries: DataFrame, index_path: str, *,
     # semantics to the ingest path's scoring (shared helper)
     indexed, _ = _ivfpq_live_minus_tombs(spark, index_path, id_col)
     if indexed is None:
-        return spark.range(0).select(
-            F.col("id").alias("qid"), F.col("id").alias("cid"),
-            F.lit(0.0).alias("sim"), F.lit(0).alias("rank")).limit(0)
-    return _ivfpq_adc_topk(indexed, queries, cents,
-                           books, id_col=id_col, vec_col=vec_col,
-                           k=k, n_probe=n_probe,
-                           query_chunk=query_chunk)
+        return _empty_topk(spark)
+    return _adc_topk(indexed, queries, books, id_col=id_col,
+                     vec_col=vec_col, k=k, query_chunk=query_chunk,
+                     cents=cents, n_probe=n_probe)
 
 
 def update_ivfpq_index(spark, batch: DataFrame, index_path: str, *,
@@ -2992,9 +2649,9 @@ def update_ivfpq_index(spark, batch: DataFrame, index_path: str, *,
     invisible until replayed; :func:`compact_ivfpq_index` folds
     history keeping the cell partitioning. Returns (qid, cid, sim,
     rank): the new batch vs everything ingested so far, self
-    excluded, scored by the shared chunked IVF-ADC engine
-    (:func:`_ivfpq_adc_topk` — driver-bounded however large the
-    increment is, probe-pruned at the parquet scan).
+    excluded, scored by the one ADC engine (:func:`_adc_topk` —
+    driver-bounded however large the increment is, probe-pruned at
+    the parquet scan).
     """
     import os
     import uuid
@@ -3013,9 +2670,7 @@ def update_ivfpq_index(spark, batch: DataFrame, index_path: str, *,
     if batch.isEmpty():
         # nothing to index OR the quantizers must not be trained on
         # nothing (the update_ann_index empty-first-batch rule)
-        return batch.select(
-            F.col(id_col).alias("qid"), F.col(id_col).alias("cid"),
-            F.lit(0.0).alias("sim"), F.lit(0).alias("rank")).limit(0)
+        return _empty_topk(spark)
 
     fs, jvm_geom = _fs(spark, geom_path)
 
@@ -3056,12 +2711,9 @@ def update_ivfpq_index(spark, batch: DataFrame, index_path: str, *,
                                    salt="ipqx:")
         cents.coalesce(1).write.mode("overwrite").parquet(cent_path)
         cents = tiny_parquet_rows(spark, cent_path)
-        if train_iter > 0:
-            books = pq_train_books(batch, id_col=id_col,
-                                   vec_col=vec_col, n_sub=n_sub,
-                                   n_cents=n_cents, n_iter=train_iter)
-        else:
-            books = _pq_books(batch, id_col, vec_col, n_sub, n_cents)
+        books = pq_train_books(batch, id_col=id_col, vec_col=vec_col,
+                               n_sub=n_sub, n_cents=n_cents,
+                               n_iter=train_iter)
         _write_landed_books(spark, books, books_path)
         books = _read_landed_books(spark, books_path, n_sub)
         # the stamp commits the build — written LAST, after both
@@ -3095,9 +2747,9 @@ def update_ivfpq_index(spark, batch: DataFrame, index_path: str, *,
     indexed, _ = _ivfpq_live_minus_tombs(spark, index_path, id_col)
     if indexed is None:
         indexed = indexed_batch.limit(0)
-    return _ivfpq_adc_topk(indexed, batch, cents, books,
-                           id_col=id_col, vec_col=vec_col, k=k,
-                           n_probe=n_probe, query_chunk=query_chunk)
+    return _adc_topk(indexed, batch, books, id_col=id_col,
+                     vec_col=vec_col, k=k, query_chunk=query_chunk,
+                     cents=cents, n_probe=n_probe)
 
 
 def _land_tombstones(spark, ids: DataFrame, index_path: str,

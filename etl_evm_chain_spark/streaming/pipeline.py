@@ -422,7 +422,7 @@ def stream_pq_ingest(vecs: DataFrame, *, index_path: str,
     Exactly-once as stream_near_dups (codes under
     ``batch_id=b<epoch>/``). Neighbor semantics are as-of-arrival, the
     ingest-time enrichment contract; a full-history re-query is one
-    ``_adc_topk_codes`` over the final lake. Streaming equals the
+    ``probe_pq_index`` over the final lake. Streaming equals the
     manual batch loop bit-for-bit (tested).
 
     State at 100 TB: no executor state — the index is a
@@ -467,7 +467,7 @@ def stream_ivfpq_ingest(vecs: DataFrame, *, index_path: str,
     Exactly-once as stream_near_dups (codes under
     ``batch_id=b<epoch>/cell=<n>/``). Neighbor semantics are as-of-arrival, the ingest-time
     enrichment contract; a full-history re-query is one
-    ``_ivfpq_adc_topk`` over the final lake. Streaming equals the
+    ``probe_ivfpq_index`` over the final lake. Streaming equals the
     manual batch loop bit-for-bit (tested).
 
     State at 100 TB: no executor state — the index is a

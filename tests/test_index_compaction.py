@@ -536,7 +536,7 @@ def test_pq_index_incremental_equals_one_shot(spark, tmp_path):
     books = sim.pq_train_books(b1, n_iter=sim.PQ_TRAIN_ITER)
     full = b1.unionByName(b2).unionByName(b3)
     codes_df = sim.pq_encode(full, books).localCheckpoint()
-    want = topk(sim._adc_topk_codes(
+    want = topk(sim._adc_topk(
         codes_df, b3, books, id_col="vec_id", vec_col="embedding",
         k=3, query_chunk=sim.PQ_QUERY_CHUNK))
     assert t_comp == want
@@ -678,8 +678,8 @@ def test_ivfpq_index_incremental_equals_one_shot(spark, tmp_path):
     acells = sim._nearest_cells(full, cents, "vec_id", "embedding",
                                 sim.IVF_ASSIGN).select("vec_id", "cell")
     indexed = codes_df.join(acells, "vec_id").localCheckpoint()
-    want = topk(sim._ivfpq_adc_topk(
-        indexed, b3, cents, books, id_col="vec_id",
+    want = topk(sim._adc_topk(
+        indexed, b3, books, cents=cents, id_col="vec_id",
         vec_col="embedding", k=3, n_probe=sim.IVF_PROBE,
         query_chunk=sim.PQ_QUERY_CHUNK))
     assert t_comp == want
@@ -809,7 +809,7 @@ def test_probe_indexes_are_read_only_and_match_one_shot(spark, tmp_path):
     assert tree(idx_pq) == before          # read-only
     books = sim.pq_train_books(corpus, n_iter=sim.PQ_TRAIN_ITER)
     codes_df = sim.pq_encode(corpus, books).localCheckpoint()
-    want = topk(sim._adc_topk_codes(
+    want = topk(sim._adc_topk(
         codes_df, queries, books, id_col="vec_id",
         vec_col="embedding", k=3, query_chunk=sim.PQ_QUERY_CHUNK))
     assert got == want and got
@@ -826,8 +826,8 @@ def test_probe_indexes_are_read_only_and_match_one_shot(spark, tmp_path):
     acells = sim._nearest_cells(corpus, cents, "vec_id", "embedding",
                                 sim.IVF_ASSIGN).select("vec_id", "cell")
     indexed = codes_df.join(acells, "vec_id").localCheckpoint()
-    want = topk(sim._ivfpq_adc_topk(
-        indexed, queries, cents, books, id_col="vec_id",
+    want = topk(sim._adc_topk(
+        indexed, queries, books, cents=cents, id_col="vec_id",
         vec_col="embedding", k=3, n_probe=sim.IVF_PROBE,
         query_chunk=sim.PQ_QUERY_CHUNK))
     assert got == want and got

@@ -461,6 +461,15 @@ def test_pq_and_ivfpq_exclude_null_vectors(spark):
         want = fn(emb, queries.filter(F.col("vec_id") < 3), k=5).collect()
         assert sorted(map(tuple, got)) == sorted(map(tuple, want))
         assert all(r["qid"] != 100001 and r["cid"] < 100001 for r in got)
+    # nothing left to score on either side: an empty result, not a
+    # crash (the update_*_index empty-batch rule)
+    nulls = dirty.filter(F.col("vec_id") > 100000)
+    for fn in (sim.pq_topk, sim.ivfpq_topk):
+        for corpus, q in ((emb, nulls), (emb, nulls.limit(0)),
+                          (nulls, queries), (emb.limit(0), queries)):
+            got = fn(corpus, q, k=5)
+            assert got.columns == ["qid", "cid", "sim", "rank"]
+            assert got.collect() == []
 
 
 def test_pq_topk_chunked_equals_one_shot(spark):
@@ -1082,6 +1091,21 @@ def test_hash_quantizer_plans_build_without_centroid_round_trips(spark):
     assert _build_jobs(spark, lambda: sim.ivf_topk(emb, q, k=3)) == 1
     assert _build_jobs(
         spark, lambda: sim.ivfpq_topk(emb, q, k=3, books=books)) <= 2
+
+
+def test_adc_query_chunks_rank_probes_on_the_driver(spark):
+    """Each query chunk of the ADC engine ranks its probe cells on the
+    driver from the rows it already collected, with no probe job. 12
+    queries in three chunks: the residual path builds with at most 13
+    jobs (a distributed probe per chunk would make it 16), plain
+    ivfpq_topk with at most 14 and pq_topk with at most 12."""
+    emb = load_table(spark, SF_SMALL, "embeddings")
+    q = emb.filter(F.col("vec_id") < 12)
+    kw = {"k": 3, "train_iter": 0, "query_chunk": 5}
+    assert _build_jobs(spark, lambda: sim.ivfpq_topk(
+        emb, q, residual=True, **kw)) <= 13
+    assert _build_jobs(spark, lambda: sim.ivfpq_topk(emb, q, **kw)) <= 14
+    assert _build_jobs(spark, lambda: sim.pq_topk(emb, q, **kw)) <= 12
 
 
 def test_rerank_exact_recovers_brute_force_within_shortlist(spark):

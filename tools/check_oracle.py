@@ -5,6 +5,10 @@ the same parquet fixtures, then compares row count, column names, and
 values (column-name-sorted, row-sorted — order-insensitive).
 
 Usage: python tools/check_oracle.py [sf_dir] [query_name ...]
+
+Query names are the full registered names (``q126_ann_recall``, not
+``q126``); any name that matches no registered query exits 2 before
+Spark starts.
 """
 
 from __future__ import annotations
@@ -72,6 +76,10 @@ def compare(name: str, spark_df: pd.DataFrame, oracle_df: pd.DataFrame) -> list[
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    unknown = sorted(only - {spec.name for spec in all_specs()})
+    if unknown:
+        print(f"unknown query names: {' '.join(unknown)}")
+        return 2
     # literal-VALUES ground-truth oracles are fixture-specific — point
     # their builders at the directory being checked
     from etl_evm_chain_spark.plans import oracle_ctx
