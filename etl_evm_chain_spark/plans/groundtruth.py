@@ -937,7 +937,7 @@ def pq_index_topk_truth(sf_dir: str, k: int, q_mod: int) -> list[tuple]:
 # distributed trainer), codes+assignments cover everything ingested
 # through the thin third increment, queries are the third increment
 # probing IVF_PROBE cells against the full landed history. Candidate =
-# assigned ∩ probed ≠ ∅ (the _ivf_adc_emit kernel's np.isin rule);
+# assigned ∩ probed ≠ ∅ (the similarity._topk_kernel cell lookup);
 # margin-asserted like q73/q134/q141.
 # ---------------------------------------------------------------------------
 

@@ -877,7 +877,11 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..catalog import literal_df
 
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
+    # the five query rows are collected once and shared by all five
+    # pipelines: each one broadcasts them as they are, so none of
+    # them plans or runs its own query-side job
+    queries = emb.filter(F.col("vec_id") < 5) \
+        .select("vec_id", "embedding").collect()
     k = 5
     # the exact pair set is consumed twice (hit join + denominator);
     # it is k×|queries| rows, so pin it rather than re-running the
@@ -904,29 +908,29 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(sim.ivfpq_topk(emb, queries, k=k, books=books)
                      .select(F.lit("ivfpq").alias("method"), "qid",
                              "cid", "rank")))
-    rel = approx.join(exact, ["qid", "cid"]).localCheckpoint()
-    hits = rel.groupBy("method").agg(F.count(F.lit(1)).alias("_h"))
-    # ordering gate: reciprocal rank of each query's FIRST relevant
-    # retrieved item, in exact integer micro-units (floor(1e6/r) — r
-    # is a small integer, the double division is boundary-safe), so
-    # MRR pins as integers like every other gate here; a query with
-    # no relevant retrieval contributes 0 by absence
-    firsts = (rel.groupBy("method", "qid")
-              .agg(F.min("rank").alias("_r")))
-    mrr = (firsts.select("method",
-                         F.floor(F.lit(1000000.0) / F.col("_r"))
-                         .cast("long").alias("_rr"))
-           .groupBy("method")
-           .agg(F.sum(F.col("_rr").cast("decimal(38,0)"))
-                .cast("long").alias("_mrr")))
+    # hits and the ordering gate from ONE (method, qid) aggregate:
+    # per query the relevant retrieved count and the rank of its
+    # FIRST relevant item, whose reciprocal counts in exact integer
+    # micro-units (floor(1e6/r) — r is a small integer, the double
+    # division is boundary-safe), so MRR pins as integers like every
+    # other gate here; a query with no relevant retrieval contributes
+    # 0 by absence
+    per_q = (approx.join(exact, ["qid", "cid"])
+             .groupBy("method", "qid")
+             .agg(F.count(F.lit(1)).alias("_hq"),
+                  F.min("rank").alias("_r")))
+    scored = (per_q.groupBy("method")
+              .agg(F.sum("_hq").alias("_h"),
+                   F.sum(F.floor(F.lit(1000000.0) / F.col("_r"))
+                         .cast("long").cast("decimal(38,0)"))
+                   .cast("long").alias("_mrr")))
     n_exact = exact.agg(F.count(F.lit(1)).alias("n_exact"))
     # literal method spine: a method with zero hits must still emit
     # its (damning) recall row rather than vanish from the gate
     base = literal_df(spark, [("ivf",), ("ivfpq",), ("lsh",), ("pq",)],
                       "method string")
     hits_c = F.coalesce(F.col("_h"), F.lit(0)).cast("long")
-    return (base.join(hits, "method", "left")
-            .join(mrr, "method", "left")
+    return (base.join(scored, "method", "left")
             .crossJoin(n_exact)
             .select(F.col("method"), hits_c.alias("hits"),
                     F.col("n_exact").cast("long").alias("n_exact"),

@@ -1082,13 +1082,14 @@ def _build_jobs(spark, build) -> int:
 def test_hash_quantizer_plans_build_without_centroid_round_trips(spark):
     """The hash-sampled quantizers rank against the rows their pick
     already collected: building ``ivf_topk`` runs exactly the pick's
-    job, and ``ivfpq_topk`` with given books at most the pick plus its
-    query probe (no centroid relation is collected back)."""
+    job and the bounded query head's, and ``ivfpq_topk`` with given
+    books at most the pick plus its query probe (no centroid relation
+    is collected back)."""
     emb = load_table(spark, SF_SMALL, "embeddings")
     q = emb.filter(F.col("vec_id") < 5)
     books = sim._pq_books(emb, "vec_id", "embedding", sim.PQ_SUB,
                           sim.PQ_CENTS)
-    assert _build_jobs(spark, lambda: sim.ivf_topk(emb, q, k=3)) == 1
+    assert _build_jobs(spark, lambda: sim.ivf_topk(emb, q, k=3)) == 2
     assert _build_jobs(
         spark, lambda: sim.ivfpq_topk(emb, q, k=3, books=books)) <= 2
 
@@ -1145,3 +1146,203 @@ def test_rerank_exact_recovers_brute_force_within_shortlist(spark):
     pq5 = {(r["qid"], r["cid"])
            for r in sim.pq_topk(emb, queries, k=5).collect()}
     assert len(rr & set(exact)) >= len(pq5 & set(exact))
+
+
+# ---------------------------------------------------------------------------
+# The broadcast-query engine against the join forms it replaced. The
+# twins below are those join forms, kept here (cosines through the HOF
+# fold of functions.vectors, which cosine_arrow matches bit for bit).
+# ---------------------------------------------------------------------------
+
+def _rank_twin(scored, k):
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("cid"))
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("qid", "cid", F.round("sim", 6).alias("sim"), "rank"))
+
+
+def _brute_twin(corpus, queries, k):
+    from etl_evm_chain_spark.functions.vectors import cosine
+
+    q = queries.select(F.col("vec_id").alias("qid"),
+                       F.col("embedding").alias("qvec"))
+    c = corpus.select(F.col("vec_id").alias("cid"),
+                      F.col("embedding").alias("cvec"))
+    return _rank_twin(c.crossJoin(F.broadcast(q))
+                      .filter(F.col("qid") != F.col("cid"))
+                      .withColumn("sim", cosine("qvec", "cvec")), k)
+
+
+def _ann_twin(corpus, queries, k):
+    from etl_evm_chain_spark.functions.vectors import cosine
+
+    def bands(df):
+        return sim._banded_buckets(df, "vec_id", "embedding",
+                                   sim.LSH_TABLES,
+                                   sim.LSH_PLANES_PER_TABLE)
+    c = bands(corpus).select(
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"),
+        F.col("tbl").alias("ctbl"), F.col("bucket").alias("cbucket"))
+    q = bands(queries).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"),
+        "tbl", F.col("bucket").alias("probe"))
+    return _rank_twin(
+        c.join(F.broadcast(q), (F.col("ctbl") == F.col("tbl"))
+               & (F.col("cbucket") == F.col("probe")))
+        .filter(F.col("qid") != F.col("cid"))
+        .dropDuplicates(["qid", "cid"])
+        .withColumn("sim", cosine("qvec", "cvec")), k)
+
+
+def _ivf_twin(corpus, queries, k):
+    cents = sim._ivf_centroid_rows(corpus, "vec_id", "embedding",
+                                   sim.IVF_CELLS, salt="ivf:")
+    assigned = sim._nearest_cells(corpus, cents, "vec_id", "embedding",
+                                  sim.IVF_ASSIGN).select(
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"),
+        "cell")
+    probed = sim._nearest_cells(queries, cents, "vec_id", "embedding",
+                                sim.IVF_PROBE).select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec"),
+        "cell")
+    return sim._probe_score_topk(assigned, F.broadcast(probed), k)
+
+
+def _ivfpq_twin(corpus, queries, k, books):
+    corpus = corpus.filter(F.col("embedding").isNotNull())
+    queries = queries.filter(F.col("embedding").isNotNull())
+    cents = sim._ivf_centroid_rows(corpus, "vec_id", "embedding",
+                                   sim.IVF_CELLS, salt="ipq:")
+    acells = sim._nearest_cells(corpus, cents, "vec_id", "embedding",
+                                sim.IVF_ASSIGN).select("vec_id", "cell")
+    indexed = sim.pq_encode(corpus, books).join(acells, "vec_id")
+    return sim._adc_topk(indexed, queries, books, id_col="vec_id",
+                         vec_col="embedding", k=k,
+                         cents=cents, n_probe=sim.IVF_PROBE)
+
+
+def _python_nodes(df) -> int:
+    """Python exec nodes of a DataFrame's physical plan."""
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return sum(1 for line in plan.splitlines()
+               if re.match(r"[\s:+\-|]*\w*(Python|Pandas|InArrow)", line))
+
+
+def _edge_corpus(spark):
+    """30 random 8-dim vectors plus a NULL, an empty, a zero and a
+    length-mismatched vector, and a repeated id (a duplicate row)."""
+    import numpy as np
+
+    rng = np.random.default_rng(11)
+    rows = [(i, [float(x) for x in rng.standard_normal(8)
+                 .astype(np.float32)]) for i in range(30)]
+    rows += [(30, None), (31, []), (32, [0.0] * 8), (33, [1.0, 2.0, 3.0]),
+             rows[5]]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def test_broadcast_topk_matches_join_forms_on_edge_cases(spark):
+    """brute/LSH/IVF/IVF-PQ one-shot return the join forms' rows bit
+    for bit on NULL, empty, zero and length-mismatched vectors and a
+    repeated id, with a NULL query and k past the candidate count,
+    under two partitionings — each in ONE Python stage. IVF and
+    IVF-PQ leave out the vectors their cell ranking and encoder
+    reject in either form (mismatched; IVF-PQ also empty)."""
+    full = _edge_corpus(spark)
+    k = 40
+    qsel = F.col("vec_id").isin(0, 1, 2, 3, 30)
+    ivf_corpus = full.filter(F.col("vec_id") != 33)
+    pq_corpus = ivf_corpus.filter(F.col("vec_id") != 31)
+    books = sim._pq_books(pq_corpus, "vec_id", "embedding", 4, 8)
+    cases = [
+        ("brute", full, lambda c, q: sim.brute_force_topk(c, q, k=k),
+         _brute_twin),
+        ("lsh", full, lambda c, q: sim.ann_topk(c, q, k=k), _ann_twin),
+        ("ivf", ivf_corpus, lambda c, q: sim.ivf_topk(c, q, k=k),
+         _ivf_twin),
+        ("ivfpq", pq_corpus,
+         lambda c, q: sim.ivfpq_topk(c, q, k=k, books=books),
+         lambda c, q, k: _ivfpq_twin(c, q, k, books)),
+    ]
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    for name, corpus, new, twin in cases:
+        queries = corpus.filter(qsel)
+        for parts in (1, 7):
+            c = corpus.repartition(parts)
+            got = new(c, queries)
+            assert _python_nodes(got) == 1, name
+            want = rows(twin(c, queries, k))
+            assert rows(got) == want and want, (name, parts)
+        # the collected query rows are scored like the query relation
+        assert rows(new(corpus, queries.collect())) == want, name
+
+
+def test_pq_topk_dedups_repeated_ids_on_every_path(spark):
+    """A corpus that repeats an id gives the same rows one-shot and
+    chunked, with no repeated (qid, cid) pair."""
+    emb = load_table(spark, SF_SMALL, "embeddings")
+    doubled = emb.unionByName(emb)
+    q = emb.filter(F.col("vec_id") < 12)
+    kw = {"k": 5, "train_iter": 0}
+    one = sorted(tuple(r) for r in sim.pq_topk(doubled, q, **kw).collect())
+    chunked = sorted(tuple(r) for r in
+                     sim.pq_topk(doubled, q, query_chunk=5, **kw).collect())
+    assert one == chunked and one
+    assert len({(r[0], r[1]) for r in one}) == len(one)
+
+
+def test_chunked_ivfpq_probe_keeps_cell_pruning(spark, tmp_path,
+                                                monkeypatch):
+    """A chunked probe of a landed IVF-PQ index scores each chunk off
+    the cell-pruned parquet scan, not a pinned copy of every cell,
+    and returns the one-shot rows."""
+    emb = load_table(spark, SF_SMALL, "embeddings")
+    idx = str(tmp_path / "ipq")
+    sim.update_ivfpq_index(spark, emb, idx, k=3, batch_id="s1",
+                           train_iter=0).collect()
+    q = emb.filter(F.col("vec_id") < 4)
+    one = sorted(tuple(r) for r in
+                 sim.probe_ivfpq_index(spark, q, idx, k=3).collect())
+    plans = []
+    frame = type(emb)
+    pin = frame.localCheckpoint
+
+    def spy(self, *a, **kw):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return pin(self, *a, **kw)
+
+    monkeypatch.setattr(frame, "localCheckpoint", spy)
+    chunked = sorted(tuple(r) for r in sim.probe_ivfpq_index(
+        spark, q, idx, k=3, query_chunk=1).collect())
+    assert chunked == one and one
+    scored = [p for p in plans if "MapInPandas" in p]
+    assert len(scored) == 4
+    for p in scored:
+        assert "PartitionFilters: [" in p and "cell" in p
+        assert "Scan ExistingRDD" not in p
+
+
+def test_workers_import_pyspark_outside_the_zip(spark):
+    """Python workers of a get_spark session import the
+    directory-installed pyspark, so the per-task importlib cache
+    invalidation never re-reads a zip archive."""
+    def probe(_):
+        import sys
+        import zipimport
+
+        import pyspark
+
+        return (pyspark.__file__,
+                any(isinstance(v, zipimport.zipimporter)
+                    for v in sys.path_importer_cache.values()))
+
+    for path, has_zip in spark.sparkContext.parallelize([0], 1) \
+            .map(probe).collect():
+        assert ".zip" not in path and not has_zip

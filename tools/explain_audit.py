@@ -83,22 +83,17 @@ ALLOW: dict[str, set[str]] = {
     "q61_media_stats": {"pandas"},  # mapInPandas media decode IS the operator
     "q72_knn_classify": {"pandas"},  # broadcast-matrix BLAS kernel
     "q73_pq_topk": {"pandas"},  # PQ encode+ADC lookup BLAS kernel
-    # composed IVF-PQ: the same encode+ADC kernels over the
-    # cell-joined codes relation (candidates pruned to probed cells)
+    # composed IVF-PQ: one kernel assigns cells, encodes and scores
+    # (candidates pruned to the broadcast queries' probed cells)
     "q134_ivfpq_topk": {"pandas"},
-    # brute-force top-k is the documented exact baseline (bounded by
-    # broadcast query side); ANN is its bucketed scale path; the
-    # Arrow kernel is the vectorized sign-plane sketch (exact
-    # sequential-fold parity with the SQL oracle via cumsum)
-    "q38_embedding_topk": {"nested_loop", "pandas"},
-    "q40_ann_topk": {"nested_loop", "pandas"},
-    # coarse-quantizer scan vs n_cells broadcast centroids (bounded);
-    # the Arrow kernel is the map-only cell assignment (exact
-    # sequential-fold parity with the SQL oracle)
-    "q42_ivf_topk": {"nested_loop", "pandas"},
-    # the recall gate COMPOSES the q38/q40/q42/q73 pipelines, so it
-    # inherits exactly their allowed shapes (broadcast-bounded NLJ,
-    # vectorized sketch/ADC kernels)
+    # exact, LSH and IVF top-k: the one broadcast-query kernel keys,
+    # looks up and scores the corpus against the broadcast query side
+    # (exact sequential-fold parity with the SQL oracles)
+    "q38_embedding_topk": {"pandas"},
+    "q40_ann_topk": {"pandas"},
+    "q42_ivf_topk": {"pandas"},
+    # the recall gate COMPOSES the q38/q40/q42/q73 pipelines (their
+    # kernels), plus the one-row n_exact crossJoin of its recall row
     "q126_ann_recall": {"nested_loop", "pandas"},
     # single-row broadcast of per-dimension stats / corpus count —
     # the scalar-subquery shape (1-row build side, no pair explosion)
